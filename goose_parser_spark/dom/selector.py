@@ -1021,6 +1021,15 @@ def _select_indexed_impl(index: DocIndex, roots: list[Element],
                          selector: Selector, ctx_is_root: bool,
                          single: bool) -> list[Element]:
     ctx_orders = {e.order for e in roots}
+    # one non-root context: a chain that leaves it by ' ' or '>' stays
+    # in its subtree, i.e. the pre-order interval (lo, hi], so a bisect
+    # of the doc-ordered pool replaces chain-checking every candidate in
+    # the document (grid sub-selectors like 'td > a' under each row were
+    # O(rows × pool)). Leading '+'/'~' reach outside it: unrestricted.
+    interval = None
+    if len(roots) == 1 and not ctx_is_root:
+        lo = roots[0].order
+        interval = (lo, index.subtree_ends().get(lo, lo))
     seen: set[int] = set()
     results: list[Element] = []
     for alt in selector.alternatives:
@@ -1029,11 +1038,16 @@ def _select_indexed_impl(index: DocIndex, roots: list[Element],
         else:
             last_idx = len(alt.steps) - 1
             last_comp = alt.steps[last_idx][1]
+            pool = index.candidates(last_comp)
+            if interval is not None and alt.steps[0][0] in (" ", ">"):
+                lo, hi = interval
+                i = bisect_right(pool, lo, key=_el_order)
+                pool = pool[i:bisect_right(pool, hi, lo=i, key=_el_order)]
             # the relation checks implement find-semantics: the ' '
             # chain walks strict ancestors, so context nodes themselves
             # never match (index.all already excludes the doc root)
             matched = [
-                el for el in index.candidates(last_comp)
+                el for el in pool
                 if _matches_compound(el, last_comp)
                 and _chain_matches(el, alt, last_idx, ctx_orders, ctx_is_root)
             ]

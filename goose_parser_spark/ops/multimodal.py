@@ -203,6 +203,8 @@ def phash_dct(
     iq = f"`{id_col}`"
     dig_exprs = [f"md5(concat(md5(`{payload_col}`), ':{j}')) AS _d{j}"
                  for j in range(4)]
+    # a NULL payload has NULL pixels, which alone would hash to 0
+    dig_exprs.append(f"`{payload_col}` IS NOT NULL AS _ok")
     if pixel_jitter is not None:
         digs = df.withColumn("_jit", pixel_jitter.cast("long")) \
                  .selectExpr(iq, "_jit", *dig_exprs)
@@ -216,8 +218,8 @@ def phash_dct(
         if k == 0 and pixel_jitter is not None:
             p = f"least(greatest({p} + _jit, 0L), 255L)"
         pix_exprs.append(f"{p} AS _p{k}")
-    base = digs.selectExpr(iq, *pix_exprs)
-    return _phash_from_pixel_cols(base, id_col, out_col)
+    base = digs.selectExpr(iq, "_ok", *pix_exprs)
+    return _phash_from_pixel_cols(base, id_col, out_col, valid_col="_ok")
 
 
 def _phash_from_pixel_cols(base: DataFrame, id_col: str, out_col: str,
@@ -268,8 +270,10 @@ def _phash_from_pixel_cols(base: DataFrame, id_col: str, out_col: str,
     # Double.parseDouble(Double.toString(x)) == x for every finite
     # double (Java spec round-trip guarantee), so the value is
     # untouched; cost is one reflective call per row on a stage doing
-    # ~10^3 arithmetic ops per row.
-    barrier = ("CAST(java_method('java.lang.Double', 'parseDouble', "
+    # ~10^3 arithmetic ops per row. try_reflect is the same
+    # CallMethodViaReflection, but NULL-safe: parseDouble(NULL) throws,
+    # and try_reflect turns that into NULL instead of aborting the job.
+    barrier = ("CAST(try_reflect('java.lang.Double', 'parseDouble', "
                "CAST({v} AS STRING)) AS DOUBLE)")
     # separable DCT: G[u][y] = sum_x C[u][x] * p[x][y]
     px = ("array(" + ",".join(
@@ -343,9 +347,7 @@ def phash_image(
             for k in range(64):
                 cols[f"_p{k}"] = []
             for doc_id, payload in zip(pdf[id_col], pdf[payload_col]):
-                if payload is None:
-                    continue
-                try:
+                try:  # a NULL payload fails here too: NULL hash
                     w, h, px = decode_image_gray(bytes(payload))
                     grid = resize_gray_box(w, h, px)
                     ok = True

@@ -19,10 +19,22 @@ from __future__ import annotations
 import math
 
 from pyspark.sql import Column, DataFrame, Window, functions as F
+from pyspark.sql.types import IntegralType
 
 
 # one-shot flag for the implicit-approximate-default warning below
 _WARNED_DEFAULT_APPROX = False
+
+
+def _require_integral_id(df: DataFrame, col: str, fn: str) -> None:
+    """Ids cross the Python stages as int64: reject any other id type
+    up front, instead of failing deep in the job or turning into NULL
+    under a non-ANSI cast."""
+    t = df.schema[col].dataType
+    if not isinstance(t, IntegralType):
+        raise ValueError(
+            f"{fn}: id column {col!r} must be an integer type "
+            f"(tinyint/smallint/int/bigint), got {t.simpleString()}")
 
 
 def _dot(a: Column, b: Column) -> Column:
@@ -100,6 +112,8 @@ def cosine_topk_multi(
     # double sits exactly on a 10^-4 halfway point) and the BLAS dot
     # differs from the fold only in summation order — equivalence
     # pinned by the pure-Python reference test and the oracle gate.
+    _require_integral_id(df, id_col, "cosine_topk_multi")
+    _require_integral_id(queries, query_id_col, "cosine_topk_multi")
     q_rows = (queries.select(F.col(query_id_col).alias("_qid"),
                              F.col(query_vec_col).cast("array<double>")
                              .alias("_qv")).collect())
@@ -350,6 +364,7 @@ def embedding_cosine_pairs(
     Pass ``dims`` to skip the one-row schema probe (a tiny driver
     action otherwise used to size the hyperplanes).
     """
+    _require_integral_id(df, id_col, "embedding_cosine_pairs")
     if lsh_prefilter is None:
         global _WARNED_DEFAULT_APPROX
         if not _WARNED_DEFAULT_APPROX:

@@ -3,16 +3,17 @@
 Implements the engine-infra operators the north rule requires on top
 of the reference's capabilities (SURVEY.md §2.8, BASELINE.json:14):
 
-I1  Salted repartition by url-hash — deterministic
-    ``pmod(xxhash64(url), B)`` buckets with ``B = partitions ×
-    salt_factor`` so host-level skew can't pile onto one task, and no
-    ``rand()`` so resume stays stable across runs.
+I1  Repartition by url-hash bucket — deterministic
+    ``pmod(xxhash64(url), B)`` buckets, no ``rand()``, so resume stays
+    stable across runs; each bucket lands wholly in one task, placed
+    by its dense slot among the run's buckets (no task left empty).
 I2  Per-partition lineage + metrics — one row per bucket with
     docs_in/ok/failed, bytes, parse time, engine version and the
     rules' sha256, written alongside the output.
 I3  Checkpoint-based resume — a bucket is complete iff its metrics
     row is committed (metrics are written AFTER data, per bucket
-    set); restart anti-joins committed buckets so finished partitions
+    set); restart reads the metrics table once and filters input to
+    the rest with a literal ``bucket IN (...)``: finished partitions
     are NEVER recomputed. Idempotent via dynamic partition overwrite.
 I4  Failure isolation — lives in the extractor (error column); the
     metrics here count it.
@@ -20,14 +21,15 @@ I4  Failure isolation — lives in the extractor (error column); the
 Scale design notes (100 TB / 10^12 docs):
 - The job is one wide stage: scan → exchange → Python runner → write.
   No joins or aggregations touch the html blobs; the only shuffle
-  moves (url, html) once, hash-distributed by bucket.
-- The resume anti-join's right side is the metrics table (≤ one row
-  per bucket — thousands, not billions) and is explicitly
-  ``broadcast()``: no shuffle of the 100 TB side for resume.
+  moves (url, html) once, placed by bucket.
+- Resume state is one driver ``collect()`` of the metrics table (≤ one
+  row per bucket — thousands, not billions); the bucket filter is a
+  literal, so the 100 TB side is never joined or shuffled for resume.
 - Metrics aggregate from the extractor's per-doc parse_ns/bytes_in
-  columns AFTER re-reading the committed output (columnar, light
-  columns only) — so a metrics row can never exist for data that
-  didn't commit, and nothing ever ``collect()``s through the driver.
+  columns AFTER re-reading the committed output of this run's buckets
+  only (partition-pruned, light columns only) — so a metrics row can
+  never exist for data that didn't commit, and resume cost scales with
+  the buckets redone, not with the output.
 """
 
 from __future__ import annotations
@@ -37,6 +39,7 @@ import json
 import time
 import uuid
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from goose_parser_spark.extractor import extract
@@ -64,9 +67,7 @@ def with_bucket(df: DataFrame, buckets: int, url_col: str = "url",
         h = F.xxhash64(F.col(url_col))
     else:
         raise ValueError(f"unknown hash_mode: {hash_mode!r}")
-    return df.withColumn(
-        "bucket", F.pmod(h, F.lit(buckets)).cast("int")
-    )
+    return df.withColumn("bucket", F.pmod(h, F.lit(buckets)).cast("int"))
 
 
 def salted_repartition(
@@ -86,6 +87,20 @@ def salted_repartition(
     return df.repartition(
         num_partitions, F.pmod(F.xxhash64(F.col(url_col)), F.lit(b))
     )
+
+
+def place_buckets(df: DataFrame, buckets: list[int],
+                  parallelism: int) -> DataFrame:
+    """I1 placement of a run's sorted ``buckets``: each wholly in one
+    task, at its dense slot modulo ``min(#buckets, max(32, 2 ×
+    parallelism))`` — no task empty, per-task bucket counts within one
+    of each other (hashing 8 ids onto 8 tasks leaves some empty)."""
+    num_parts = min(len(buckets), max(32, parallelism * 2))
+    slot = F.array_position(F.array(*map(F.lit, buckets)), F.col("bucket"))
+    return df.repartitionById(num_parts, slot.cast("int") - 1)
+
+
+_RESUME_SCHEMA = "bucket INT, buckets INT, url_col STRING, rules_sha256 STRING"
 
 
 class ExtractJob:
@@ -125,42 +140,37 @@ class ExtractJob:
 
     # -- resume state ----------------------------------------------------------
 
-    def committed_buckets(self) -> DataFrame | None:
-        """Buckets with a committed metrics row (None if first run)."""
+    def _committed_buckets(self, validate: bool) -> set[int]:
+        """Buckets with a committed metrics row (empty on a first run),
+        from ONE driver-side read of the metrics table: ``bucket`` plus
+        the config columns, ≤ one row per bucket — never per-doc."""
         try:
-            return (self.spark.read.format(self.fmt).load(self.metrics_dir)
-                    .select("bucket").distinct())
-        except Exception:  # AnalysisException: path does not exist
-            return None
+            # no schema inference; pre-upgrade rows read NULL config
+            rows = (self.spark.read.schema(_RESUME_SCHEMA).format(self.fmt)
+                    .load(self.metrics_dir).collect())
+        except AnalysisException:  # path does not exist
+            return set()
+        if validate:
+            self._validate_resume_config({tuple(r[1:]) for r in rows})
+        return {r["bucket"] for r in rows}
 
-    def _validate_resume_config(self) -> None:
+    def _validate_resume_config(self, configs: set[tuple]) -> None:
         """Fail fast when this job's config disagrees with the one the
         committed metrics were written under (ADVICE r01, medium).
 
         Bucket membership is ``pmod(xxhash64(url), buckets)``: resuming
         with a different ``buckets`` (or a different url column) reuses
-        committed bucket ids whose MEMBERSHIP changed — the anti-join
+        committed bucket ids whose MEMBERSHIP changed — the bucket filter
         would silently skip never-extracted documents and re-extract
         others. Same for a changed rule tree: committed buckets would
         hold a different output schema/content than new ones. All three
         are corruption-with-no-error, so they are hard errors here.
         """
-        try:
-            m = self.spark.read.format(self.fmt).load(self.metrics_dir)
-        except Exception:
-            return
-        if "buckets" not in m.columns:  # metrics written pre-upgrade
-            return
         # ADVICE r02: a metrics dir can mix pre-upgrade rows (config
-        # columns NULL under schema evolution) with new rows — .head()
-        # made validation depend on which row Spark sampled. Check ALL
-        # distinct non-null config tuples instead: deterministic, and a
-        # dir written under two different configs is itself an error.
-        rows = (m.select("buckets", "url_col", "rules_sha256")
-                .where(F.col("buckets").isNotNull()
-                       & F.col("url_col").isNotNull()
-                       & F.col("rules_sha256").isNotNull())
-                .distinct().collect())  # ≤ #configs rows, never per-doc
+        # columns NULL) with new rows. Check ALL distinct non-null
+        # tuples: deterministic, and a dir written under two different
+        # configs is itself an error.
+        rows = [c for c in configs if None not in c]
         if not rows:
             return
         if len(rows) > 1:
@@ -169,21 +179,21 @@ class ExtractJob:
                 f"carry {len(rows)} distinct (buckets, url_col, "
                 "rules_sha256) configs — the output dir mixes runs with "
                 "incompatible bucket membership. Use a fresh output_dir.")
-        row = rows[0]
-        if row["buckets"] != self.buckets:
+        (buckets, url_col, sha), = rows
+        if buckets != self.buckets:
             raise ValueError(
                 f"resume config mismatch: output at {self.metrics_dir} was "
-                f"written with buckets={row['buckets']}, this job has "
+                f"written with buckets={buckets}, this job has "
                 f"buckets={self.buckets}; bucket membership differs — "
                 "resume would skip/redo the wrong documents. Use the "
                 "original bucket count or a fresh output_dir.")
-        if row["url_col"] != self.url_col:
+        if url_col != self.url_col:
             raise ValueError(
-                f"resume config mismatch: url_col was {row['url_col']!r}, "
+                f"resume config mismatch: url_col was {url_col!r}, "
                 f"this job uses {self.url_col!r}; bucket membership "
                 "differs. Use the original url column or a fresh "
                 "output_dir.")
-        if row["rules_sha256"] != rules_sha256(self.rules_spec):
+        if sha != rules_sha256(self.rules_spec):
             raise ValueError(
                 "resume config mismatch: the rule tree changed since the "
                 "committed run (rules_sha256 differs); committed buckets "
@@ -209,35 +219,33 @@ class ExtractJob:
         """
         run_id = uuid.uuid4().hex
         t0 = time.time()
+        committed = self._committed_buckets(validate=resume)
+        # buckets without a metrics row: a resume redoes only these
+        fresh = [b for b in range(self.buckets) if b not in committed]
+        todo = fresh if resume else list(range(self.buckets))
+        if todo:  # nothing to redo → no extraction job at all
+            self._write_buckets(pages, todo, fresh, run_id, salt_shuffle)
+        return {
+            "run_id": run_id,
+            "buckets_total": self.buckets,
+            "buckets_skipped_by_resume": len(committed) if resume else 0,
+            "wall_seconds": time.time() - t0,
+        }
 
+    def _write_buckets(self, pages: DataFrame, todo: list[int],
+                       fresh: list[int], run_id: str,
+                       salt_shuffle: bool) -> None:
+        """Extract and write ``todo``; append metrics rows for ``fresh``."""
+        # a literal IN list, ≤ `buckets` ints (InSet): the input side is
+        # filtered before the shuffle, and nothing is broadcast or joined
         bucketed = with_bucket(
             pages.select(self.url_col, self.html_col), self.buckets, self.url_col
-        )
-
-        skipped = 0
-        if resume:
-            self._validate_resume_config()
-            committed = self.committed_buckets()
-            if committed is not None:
-                skipped = committed.count()
-                # broadcast anti-join: metrics side is ≤ `buckets` rows;
-                # the 100 TB side never shuffles for resume (I3).
-                bucketed = bucketed.join(
-                    F.broadcast(committed), on="bucket", how="left_anti"
-                )
-
+        ).where(F.col("bucket").isin(todo))
         if salt_shuffle:
-            parallelism = self.spark.sparkContext.defaultParallelism
-            num_parts = min(self.buckets, max(32, parallelism * 2))
-            bucketed = bucketed.repartition(num_parts, F.col("bucket"))
-
-        extracted = extract(
-            bucketed,
-            self.compiled,
-            html_col=self.html_col,
-            url_col=self.url_col,
-            keep_cols=("bucket",),
-        )
+            bucketed = place_buckets(
+                bucketed, todo, self.spark.sparkContext.defaultParallelism)
+        extracted = extract(bucketed, self.compiled, html_col=self.html_col,
+                            url_col=self.url_col, keep_cols=("bucket",))
 
         # data write: partitioned by bucket, dynamic overwrite so a
         # re-run of an uncommitted bucket replaces its partial files
@@ -246,18 +254,17 @@ class ExtractJob:
             .option("partitionOverwriteMode", "dynamic")
             .partitionBy("bucket")
             .save(self.data_dir))
+        if not fresh:
+            return
 
-        # metrics AFTER data, derived from the committed output files —
-        # re-read only the light columns (columnar scan skips html/
-        # extracted entirely), aggregate per bucket, append.
-        out = self.spark.read.format(self.fmt).load(self.data_dir)
-        committed_now = self.committed_buckets()
-        todo_metrics = out.select("bucket", "error", "parse_ns", "bytes_in")
-        if committed_now is not None:
-            todo_metrics = todo_metrics.join(
-                F.broadcast(committed_now), on="bucket", how="left_anti"
-            )
-        metrics = (todo_metrics
+        # metrics AFTER data, from the committed files of this run's
+        # fresh buckets only: the partition filter prunes the re-read to
+        # their directories and the known schema opens no other file
+        # (light columns only — html/extracted are skipped entirely)
+        out = (self.spark.read.schema(extracted.schema).format(self.fmt)
+               .load(self.data_dir)
+               .where(F.col("bucket").isin(fresh)))
+        metrics = (out.select("bucket", "error", "parse_ns", "bytes_in")
             .groupBy("bucket")
             .agg(
                 F.count("*").alias("docs_in"),
@@ -275,13 +282,6 @@ class ExtractJob:
             .withColumn("url_col", F.lit(self.url_col))
             .withColumn("completed_at", F.current_timestamp()))
         metrics.write.format(self.fmt).mode("append").save(self.metrics_dir)
-
-        return {
-            "run_id": run_id,
-            "buckets_total": self.buckets,
-            "buckets_skipped_by_resume": skipped,
-            "wall_seconds": time.time() - t0,
-        }
 
 
 def _engine_version() -> str:

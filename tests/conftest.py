@@ -1,5 +1,6 @@
 import os
 import sys
+import uuid
 
 import pytest
 
@@ -25,3 +26,22 @@ def spark():
     )
     yield session
     session.stop()
+
+
+@pytest.fixture
+def count_jobs(spark):
+    """``count_jobs(fn, *args, **kwargs)`` calls ``fn`` under a fresh job
+    group and returns ``(result, n)``, ``n`` the Spark jobs it launched."""
+    sc = spark.sparkContext
+
+    def count(fn, *args, **kwargs):
+        group = f"count-jobs-{uuid.uuid4().hex}"
+        sc.setJobGroup(group, "count_jobs")
+        try:
+            result = fn(*args, **kwargs)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        return result, len(sc.statusTracker().getJobIdsForGroup(group))
+
+    return count

@@ -174,10 +174,11 @@ def test_phash_image_perceptual_and_poison(spark):
     rows = [(1, bytearray(png)), (2, bytearray(brighter)),
             (3, bytearray(other)), (4, bytearray(pgm)),
             (5, bytearray(b"\xff\xd8 not decodable")),
-            (6, bytearray(softer))]
+            (6, bytearray(softer)), (7, None)]
     df = spark.createDataFrame(rows, "doc_id long, payload binary")
     out = {r["doc_id"]: r["phash"] for r in phash_image(df).collect()}
     assert out[5] is None
+    assert out[7] is None  # NULL payload: a NULL hash row (I4)
     assert out[1] == out[4]  # same pixels, different container
     bright_bits = bin(out[1] ^ out[2]).count("1")
     soft_bits = bin(out[1] ^ out[6]).count("1")

@@ -9,6 +9,7 @@ from pyspark.sql import functions as F
 
 from goose_parser_spark.plans.pipeline import (
     ExtractJob,
+    place_buckets,
     rules_sha256,
     salted_repartition,
     with_bucket,
@@ -176,3 +177,59 @@ def test_resume_rejects_changed_url_col_and_rules(spark, pages_df, tmp_path):
     summary = ExtractJob(spark, RULES, out, buckets=8).run(pages_df,
                                                            resume=True)
     assert summary["buckets_skipped_by_resume"] > 0
+
+
+def test_resume_of_committed_output_reads_metrics_once(spark, pages_df,
+                                                       tmp_path, count_jobs):
+    """A fully committed output costs one job on resume: the single
+    metrics read. No extraction, data write or metrics job runs."""
+    out = str(tmp_path / "out")
+    job = ExtractJob(spark, RULES, out, buckets=8)
+    job.run(pages_df, resume=True)
+    assert (spark.read.parquet(f"{out}/metrics").select("bucket")
+            .distinct().count()) == 8  # every bucket committed
+    summary, jobs = count_jobs(job.run, pages_df, resume=True)
+    assert summary["buckets_skipped_by_resume"] == 8
+    assert jobs == 1
+
+
+def test_resume_never_reads_committed_bucket_data(spark, pages_df, tmp_path):
+    """The metrics step reads only the buckets this run wrote: a
+    committed bucket's data file turned to garbage does not break a
+    resume that redoes other buckets."""
+    out = str(tmp_path / "out")
+    job = ExtractJob(spark, RULES, out, buckets=8)
+    bucketed = with_bucket(pages_df, 8)
+    job.run(bucketed.filter(F.col("bucket") < 4).drop("bucket"), resume=True)
+    for path in glob.glob(f"{out}/data/bucket=0/*.parquet"):
+        with open(path, "wb") as fh:
+            fh.write(b"not a parquet file" * 64)
+
+    summary = job.run(pages_df, resume=True)
+    assert summary["buckets_skipped_by_resume"] == 4
+    m = spark.read.parquet(f"{out}/metrics").collect()
+    assert sorted(r["bucket"] for r in m) == list(range(8))
+    want = dict(bucketed.filter(F.col("bucket") >= 4)
+                .groupBy("bucket").count().collect())
+    assert {r["bucket"]: r["docs_in"] for r in m if r["bucket"] >= 4} == want
+
+
+@pytest.mark.parametrize("buckets", [8, 37, 256])
+@pytest.mark.parametrize("parallelism", [4, 64])
+def test_place_buckets_is_exact(spark, buckets, parallelism):
+    """Every task gets a bucket, no bucket is split, and per-task
+    bucket counts differ by at most one, for a full run and for a
+    resume that redoes every third bucket."""
+    rows = spark.range(buckets * 3).withColumn(
+        "bucket", (F.col("id") % buckets).cast("int"))
+    for todo in (list(range(buckets)), list(range(0, buckets, 3))):
+        placed = place_buckets(rows.where(F.col("bucket").isin(todo)), todo,
+                               parallelism)
+        parts = placed.rdd.getNumPartitions()
+        assert parts == min(len(todo), max(32, 2 * parallelism))
+        by_task = dict(placed.groupBy(F.spark_partition_id().alias("pid"))
+                       .agg(F.collect_set("bucket")).collect())
+        assert sorted(by_task) == list(range(parts))  # no empty task
+        assert sorted(b for bs in by_task.values() for b in bs) == todo
+        sizes = [len(bs) for bs in by_task.values()]
+        assert max(sizes) - min(sizes) <= 1, sizes

@@ -2,6 +2,7 @@
 hybrid-retrieval rank fusion, BPE tokenizer training, embedding
 outlier pruning."""
 
+import pytest
 from pyspark.sql import functions as F
 
 
@@ -98,6 +99,30 @@ def test_cosine_topk_multi_matches_single(spark):
         single = cosine_topk(emb, qvec, k=5).collect()
         assert [(r["vec_id"], r["sim"]) for r in rows] == \
             [(s["vec_id"], s["sim"]) for s in single]
+
+
+def test_cosine_topk_multi_rejects_string_ids(spark):
+    """Ids travel as int64: string ids fail up front with a clear
+    ValueError, not deep in the job."""
+    from goose_parser_spark.ops.similarity import cosine_topk_multi
+    emb = spark.createDataFrame([("a", [1.0, 0.0]), ("b", [0.0, 1.0])],
+                                "vec_id string, embedding array<double>")
+    qs = spark.createDataFrame([(1, [1.0, 0.0])],
+                               "query_id long, embedding array<double>")
+    with pytest.raises(ValueError, match="'vec_id' must be an integer"):
+        cosine_topk_multi(emb, qs, k=1)
+    with pytest.raises(ValueError, match="'query_id' must be an integer"):
+        cosine_topk_multi(emb.withColumn("vec_id", F.lit(1)),
+                          qs.withColumn("query_id", F.lit("q")), k=1)
+
+
+def test_embedding_cosine_pairs_rejects_string_ids(spark):
+    from goose_parser_spark.ops.similarity import embedding_cosine_pairs
+    emb = spark.createDataFrame([("a", [1.0, 0.0]), ("b", [1.0, 0.1])],
+                                "vec_id string, embedding array<double>")
+    for lsh in (True, False):
+        with pytest.raises(ValueError, match="'vec_id' must be an integer"):
+            embedding_cosine_pairs(emb, lsh_prefilter=lsh, dims=2)
 
 
 def test_policy_filter_reasons_and_precedence(spark):
@@ -293,15 +318,25 @@ def test_phash_dct_matches_reference_and_perceptual_props(spark):
 
     rows = [(i, f"img-{i // 4}".encode(), (i % 4) * 74)
             for i in range(24)]
+    rows.append((24, None, 74))  # NULL payload: NULL hash, no abort (I4)
     df = spark.createDataFrame(rows, "doc_id long, payload binary, j long")
     out = {r["doc_id"]: r["phash"]
            for r in phash_dct(df, pixel_jitter=F.col("j")).collect()}
     for i in range(24):
         assert out[i] == ref_phash(f"img-{i // 4}".encode(), (i % 4) * 74)
+    assert out[24] is None
     # no jitter -> byte-identical payload -> identical hash
     out0 = {r["doc_id"]: r["phash"] for r in phash_dct(
         df.select("doc_id", "payload")).collect()}
     assert out0[0] == out0[1] == out0[2] == out0[3]
+    assert out0[24] is None
+    # the reflect barrier stays a codegen fallback: it splits the DCT
+    # chain into several small whole-stage-codegen stages
+    import re
+    plan = phash_dct(df.select("doc_id", "payload"))._jdf.queryExecution() \
+        .executedPlan().toString()
+    assert "reflect" in plan.lower()
+    assert len(set(re.findall(r"\*\((\d+)\)", plan))) >= 3, plan
     # small pixel jitter flips few bits; unrelated images ~half
     near = bin(out[0] ^ out[3]).count("1")       # jitter 0 vs 222
     far = bin(out[0] ^ out[4]).count("1")        # img-0 vs img-1

@@ -377,3 +377,46 @@ def test_has_store_survives_argument_selector_identity_reuse():
     # and same-source selectors share the cache (one doc pass)
     assert len(idx.has_store) == 2
     assert set(idx.has_store) == {"span", "em"}
+
+
+def _grid_page(rng, rows: int) -> str:
+    cells = []
+    for r in range(rows):
+        link = (f'<a class="link" href="/i/{r}">x</a>' if rng.random() < 0.7
+                else "<b>none</b>")
+        cells.append(
+            f'<tr class="{rng.choice(["row", "row alt", "ad"])}">'
+            f'<td class="sku">S{r}</td><td class="price">{r}.5</td>'
+            f'<td>{link}</td><td class="note"><a href="#">n</a></td></tr>')
+    return (f'<html><body><a class="link" href="/top">t</a>'
+            f'<table><thead><tr><th>h</th></tr></thead><tbody>{"".join(cells)}'
+            f'</tbody></table><div><a class="link" href="/foot">f</a></div>'
+            f'</body></html>')
+
+
+_GRID_SELECTORS = [
+    "td > a.link", "td a", "a.link", "> td", "td.sku ~ td", "td + td > a",
+    "tr td.price", "* > a", "+ tr", "~ tr", "+ tr td.sku", "~ tr.row > td a",
+    "~ td", "+ td > a", "td > a.link, + tr", "~ tr a.link, td.sku",
+]
+
+
+def test_indexed_grid_sub_selectors_match_walker():
+    """Sub-selectors evaluated under each grid row (and each cell) must
+    equal the set-based walker: chains led by ' ' or '>' search only the
+    context's subtree interval, while leading '+'/'~' reach siblings
+    outside it and must stay unrestricted."""
+    import random
+    from goose_parser_spark.dom.parser import parse_document
+
+    rng = random.Random(5)
+    for trial in range(6):
+        root, created = parse_document(_grid_page(rng, rng.randrange(1, 90)))
+        idx = DocIndex(root, created)
+        contexts = select(root, "tr") + select(root, "td") + \
+            select(root, "tbody, table")
+        assert contexts
+        for ctx in contexts:
+            for sel in _GRID_SELECTORS:
+                assert [e.order for e in select_indexed(idx, ctx, sel)] == \
+                    [e.order for e in select(ctx, sel)], (trial, sel)
