@@ -20,7 +20,13 @@ Design notes
 
 from __future__ import annotations
 
+import gc
+import time
+from collections.abc import Iterable, Iterator
 from html.parser import HTMLParser
+from typing import TypeVar
+
+_T = TypeVar("_T")
 
 
 # HTML5 void elements: never have children, never pushed on the stack.
@@ -444,3 +450,46 @@ def parse_document(html: str | bytes, backend: str = "fast"):
     builder.close()
     changed = _ensure_document_structure(builder.root)
     return builder.root, (None if changed else builder.created)
+
+
+def each_document(items: Iterable[_T],
+                  parse_ns: list[int] | None = None) -> Iterator[_T]:
+    """Iterate a batch's documents, freeing each one's DOM as the loop
+    moves past it.
+
+    A parsed page is a reference cycle: every ``Element`` points at its
+    ``parent``, which lists it in ``children``, and a selector
+    ``DocIndex`` and its ``_EvalCtx`` point at each other
+    (``eval_ctx`` / ``index``). Reference counting never frees a cycle;
+    only CPython's cyclic collector does. Left to its default
+    700-allocation threshold, the collector runs many times per heavy
+    page and re-traverses the live, half-built tree on every run, and
+    finished trees wait in the older generations until a full
+    collection.
+
+    So for the length of the loop automatic collection is paused, and
+    after each document one generation-0 collection frees that
+    document's tree, which was allocated since the previous one. The
+    loop body must drop its own references to the tree before the next
+    item (call a function that parses and returns plain values; do not
+    bind the root to a loop variable), or the tree survives into
+    generation 1, which these collections never visit.
+
+    With ``parse_ns``, entry ``i`` receives the ``i``-th document's
+    time, the collection included. The caller's GC state (enabled or
+    disabled) is restored when the loop ends, raises or is abandoned,
+    so a batch generator that finishes the loop before its ``yield``
+    hands its consumer the GC state it found.
+    """
+    enabled = gc.isenabled()
+    gc.disable()
+    try:
+        for i, item in enumerate(items):
+            t0 = time.perf_counter_ns()
+            yield item
+            gc.collect(0)
+            if parse_ns is not None:
+                parse_ns[i] = time.perf_counter_ns() - t0
+    finally:
+        if enabled:
+            gc.enable()

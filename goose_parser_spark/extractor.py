@@ -7,6 +7,15 @@ Vectorized Query Execution", CIDR 2022 — see PAPERS.md). Per batch we loop doc
 (DOM parsing is inherently per-document), parse each page's HTML once,
 and evaluate the entire compiled rule tree against it (SURVEY.md §3.2).
 
+Each page's DOM is freed when its document ends. A parsed tree is a
+reference cycle (``Element.parent`` ↔ ``children``, and
+``DocIndex.eval_ctx`` ↔ ``_EvalCtx.index``), so only CPython's cyclic
+collector can free it; at its default threshold the collector
+re-traverses live, half-built trees many times per heavy page. The
+per-document loops therefore run under ``dom.parser.each_document``:
+automatic collection paused, one generation-0 collection after each
+document, counted in its ``parse_ns``.
+
 Failure isolation (SURVEY.md §2.8 I4): a poison document yields
 ``extracted = NULL`` plus an ``error`` string and is counted in the
 per-partition metrics — it never kills the job.
@@ -14,11 +23,7 @@ per-partition metrics — it never kills the job.
 
 from __future__ import annotations
 
-import time
-from collections.abc import Iterator
 from typing import TYPE_CHECKING
-
-import pandas as pd
 
 from pyspark.sql.types import (
     LongType,
@@ -27,6 +32,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from goose_parser_spark.dom.parser import each_document
 from goose_parser_spark.rules.compiler import CompiledRules, RuleCompiler
 from goose_parser_spark.rules.evaluator import evaluate_document
 
@@ -55,53 +61,31 @@ def output_schema(compiled: CompiledRules, url_col: str = "url",
     ])
 
 
-def build_extractor(
-    compiled: CompiledRules,
-    html_col: str = "html",
-    url_col: str = "url",
-):
-    """Build the mapInPandas function for a compiled rule tree.
+def _html_values(hcol) -> tuple[list, list[int]]:
+    """An html Arrow column as Python ``str`` values (None for NULL)
+    plus each row's ``bytes_in``.
 
-    The compiled plan (parsed selectors, compiled transforms, derived
-    schema) is captured in the closure — pickled once and shipped to
-    every executor, the moral equivalent of a broadcast variable.
+    One C-level materialization per batch (vs per-element scalar
+    wrappers or a pandas object Series). Binary html is cast to utf8
+    FIRST: the cast validates+reinterprets buffers in C and to_pylist
+    then builds str objects directly — skipping n intermediate bytes
+    objects and n per-doc .decode() calls (~7% of batch time at 16
+    cores). Invalid utf-8 anywhere in the batch falls back to the
+    per-doc decode path so poison docs stay isolated (I4).
+    ``bytes_in`` is the true byte size for binary html and the length
+    for string html; 0 for NULL."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
 
-    NOTE: this variant runs the FULL transform chain in Python and
-    pairs with ``output_schema(compiled)`` (the final schema). The
-    shipped :func:`extract` path uses the Arrow variant plus native
-    post-UDF lowering of byte-safe suffixes (functions/native.py);
-    both produce identical values (test_native_lowering.py).
-    """
-
-    def extract_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            urls = pdf[url_col]
-            htmls = pdf[html_col]
-            n = len(pdf)
-            extracted: list[object] = [None] * n
-            errors: list[str | None] = [None] * n
-            parse_ns: list[int] = [0] * n
-            bytes_in: list[int] = [0] * n
-            for i in range(n):
-                raw = htmls.iloc[i]
-                bytes_in[i] = len(raw) if raw is not None else 0
-                t0 = time.perf_counter_ns()
-                try:
-                    if raw is None:
-                        raise ValueError("html is NULL")
-                    extracted[i] = evaluate_document(compiled, raw)
-                except Exception as exc:  # noqa: BLE001 — I4 poison isolation
-                    errors[i] = f"{type(exc).__name__}: {exc}"
-                parse_ns[i] = time.perf_counter_ns() - t0
-            yield pd.DataFrame({
-                url_col: urls.reset_index(drop=True),
-                "extracted": pd.Series(extracted, dtype="object"),
-                "error": pd.Series(errors, dtype="object"),
-                "parse_ns": pd.Series(parse_ns, dtype="int64"),
-                "bytes_in": pd.Series(bytes_in, dtype="int64"),
-            })
-
-    return extract_batches
+    if not (pa.types.is_binary(hcol.type) or pa.types.is_large_binary(hcol.type)):
+        raws = hcol.to_pylist()
+        return raws, [len(r) if r is not None else 0 for r in raws]
+    sizes = pc.binary_length(hcol).fill_null(0).to_pylist()
+    try:
+        return hcol.cast(pa.large_string()).to_pylist(), sizes
+    except pa.ArrowInvalid:
+        return [b.decode("utf-8", errors="replace") if b is not None else None
+                for b in hcol.to_pylist()], sizes
 
 
 def build_arrow_extractor(
@@ -111,60 +95,40 @@ def build_arrow_extractor(
     keep_cols: tuple[str, ...] = (),
     spark_schema: StructType | None = None,
 ):
-    """mapInArrow variant of the extractor: consumes/produces raw
-    Arrow RecordBatches, skipping the Arrow→pandas→Arrow conversion of
-    multi-KB html blobs (one fewer copy + no per-row object-array
-    churn — measurable at high core counts where allocator traffic
-    contends on the kernel mmap lock)."""
+    """Build the mapInArrow function for a compiled rule tree.
+
+    The compiled plan (parsed selectors, compiled transforms, derived
+    schema) is captured in the closure — pickled once and shipped to
+    every executor, the moral equivalent of a broadcast variable. The
+    function consumes/produces raw Arrow RecordBatches, skipping the
+    Arrow→pandas→Arrow conversion of multi-KB html blobs (one fewer
+    copy + no per-row object-array churn — measurable at high core
+    counts where allocator traffic contends on the kernel mmap lock).
+    It runs the transform chain minus the natively lowered suffixes,
+    which :func:`extract` applies post-UDF (functions/native.py)."""
     from pyspark.sql.pandas.types import to_arrow_schema
 
     out_arrow_schema = to_arrow_schema(spark_schema)
 
     def extract_batches(batches):
         import pyarrow as pa
-        import pyarrow.compute as pc
 
         for batch in batches:
             names = batch.schema.names
             urls = batch.column(names.index(url_col))
-            hcol = batch.column(names.index(html_col))
+            raws, bytes_in = _html_values(batch.column(names.index(html_col)))
             n = batch.num_rows
-            # one C-level materialization per batch (vs per-element
-            # scalar wrappers or a pandas object Series). For binary
-            # html, cast to utf8 FIRST: the cast validates+reinterprets
-            # buffers in C and to_pylist then builds str objects
-            # directly — skipping n intermediate bytes objects and n
-            # per-doc .decode() calls (~7% of batch time at 16 cores).
-            # Invalid utf-8 anywhere in the batch falls back to the
-            # per-doc decode path so poison docs stay isolated (I4).
-            if pa.types.is_binary(hcol.type) or pa.types.is_large_binary(hcol.type):
-                lengths = pc.binary_length(hcol).to_pylist()  # true byte sizes
-                try:
-                    raws = hcol.cast(pa.large_string()).to_pylist()
-                except pa.ArrowInvalid:
-                    raws = [b.decode("utf-8", errors="replace")
-                            if b is not None else None
-                            for b in hcol.to_pylist()]
-            else:
-                raws = hcol.to_pylist()
-                lengths = None
             extracted: list[object] = [None] * n
             errors: list[str | None] = [None] * n
             parse_ns: list[int] = [0] * n
-            bytes_in: list[int] = [0] * n
-            for i in range(n):
-                raw = raws[i]
-                if raw is not None:
-                    bytes_in[i] = lengths[i] if lengths is not None else len(raw)
-                t0 = time.perf_counter_ns()
+            for i in each_document(range(n), parse_ns):
                 try:
-                    if raw is None:
+                    if raws[i] is None:
                         raise ValueError("html is NULL")
-                    extracted[i] = evaluate_document(compiled, raw,
+                    extracted[i] = evaluate_document(compiled, raws[i],
                                                      skip_lowered=True)
                 except Exception as exc:  # noqa: BLE001 — I4 poison isolation
                     errors[i] = f"{type(exc).__name__}: {exc}"
-                parse_ns[i] = time.perf_counter_ns() - t0
             arrays = [
                 urls,
                 pa.array(extracted, type=out_arrow_schema.field("extracted").type),
@@ -232,7 +196,6 @@ def extract_many(
     """
     from pyspark.sql.pandas.types import to_arrow_schema
     from goose_parser_spark.deploy import ship_package
-    from goose_parser_spark.rules.evaluator import evaluate_document_many
     ship_package(df.sparkSession)
 
     compiled = {
@@ -254,59 +217,44 @@ def extract_many(
 
     def run(batches):
         import pyarrow as pa
-        import pyarrow.compute as pc
         from goose_parser_spark.rules.evaluator import (
             _DocContext, _union_universe, evaluate_branches)
         from goose_parser_spark.dom.parser import parse_document
 
         universe = _union_universe(compiled.values())
 
+        def evaluate_trees(raw: str, errs: list[str]) -> dict[str, object]:
+            # the parsed tree lives only in this frame, so it is
+            # garbage by the time each_document collects
+            root, elements = parse_document(raw)
+            doc = _DocContext(root, elements, universe=universe)
+            row: dict[str, object] = {}
+            for name in names_in_order:
+                try:
+                    row[name] = evaluate_branches(compiled[name].branches, doc)
+                except Exception as exc:  # noqa: BLE001 — per-tree I4
+                    row[name] = None
+                    errs.append(f"tree={name}: {type(exc).__name__}: {exc}")
+            return row
+
         for batch in batches:
             cols = batch.schema.names
             urls = batch.column(cols.index(url_col))
-            hcol = batch.column(cols.index(html_col))
+            raws, bytes_in = _html_values(batch.column(cols.index(html_col)))
             n = batch.num_rows
-            if pa.types.is_binary(hcol.type) or pa.types.is_large_binary(hcol.type):
-                lengths = pc.binary_length(hcol).to_pylist()
-                try:
-                    raws = hcol.cast(pa.large_string()).to_pylist()
-                except pa.ArrowInvalid:
-                    raws = [b.decode("utf-8", errors="replace")
-                            if b is not None else None
-                            for b in hcol.to_pylist()]
-            else:
-                raws = hcol.to_pylist()
-                lengths = None
             extracted: list[object] = [None] * n
             errors: list[str | None] = [None] * n
             parse_ns: list[int] = [0] * n
-            bytes_in: list[int] = [0] * n
-            for i in range(n):
-                raw = raws[i]
-                if raw is not None:
-                    bytes_in[i] = lengths[i] if lengths is not None else len(raw)
-                t0 = time.perf_counter_ns()
+            for i in each_document(range(n), parse_ns):
                 errs: list[str] = []
                 try:
-                    if raw is None:
+                    if raws[i] is None:
                         raise ValueError("html is NULL")
-                    root, elements = parse_document(raw)
-                    doc = _DocContext(root, elements, universe=universe)
-                    row: dict[str, object] = {}
-                    for name in names_in_order:
-                        try:
-                            row[name] = evaluate_branches(
-                                compiled[name].branches, doc)
-                        except Exception as exc:  # noqa: BLE001 — per-tree I4
-                            row[name] = None
-                            errs.append(f"tree={name}: "
-                                        f"{type(exc).__name__}: {exc}")
-                    extracted[i] = row
+                    extracted[i] = evaluate_trees(raws[i], errs)
                 except Exception as exc:  # noqa: BLE001 — I4 isolation
                     errs.append(f"{type(exc).__name__}: {exc}")
                 if errs:
                     errors[i] = "; ".join(errs)
-                parse_ns[i] = time.perf_counter_ns() - t0
             yield pa.RecordBatch.from_arrays([
                 urls,
                 pa.array(extracted,

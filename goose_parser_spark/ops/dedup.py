@@ -406,7 +406,8 @@ def minhash_lsh_dedup(
     # Exact-Jaccard verification per candidate pair only — the LSH
     # point at scale: shingle arrays are materialized just for
     # candidate-touched docs, and each pair is scored independently.
-    cand = cand.cache()
+    # No cache(): nothing would unpersist it, so every call would pin
+    # its candidate table for the life of the session.
     # r07: in the r=1 candidate-FLOOD regime the candidate-doc set is
     # derived from the BANDED table, not the pair stream — a doc is
     # candidate-touched exactly when one of its (band, band_hash)
@@ -992,8 +993,7 @@ def dedup_against_index(
             .distinct())
     # exact verification over the matched docs only (ids are disjoint
     # across increment and corpus, so one unioned doc table serves
-    # both sides of the pair)
-    cand = cand.cache()
+    # both sides of the pair; not cached, as in minhash_lsh_dedup)
     new_r = new_docs.join(cand.select(F.col("new_id").alias(id_col))
                           .distinct(), on=id_col, how="left_semi")
     corp_r = corpus.join(cand.select(F.col("corpus_id").alias(id_col))

@@ -101,8 +101,8 @@ def parse_epub(data: bytes) -> list[dict]:
             posixpath.normpath(posixpath.join(base, href)),
             tm.group(1) if tm else b"")
     chapters: list[dict] = []
-    from goose_parser_spark.dom.parser import parse_html
-    for no, sm in enumerate(_IDREF.finditer(opf)):
+    from goose_parser_spark.dom.parser import each_document, parse_html
+    for no, sm in each_document(enumerate(_IDREF.finditer(opf))):
         entry = manifest.get(sm.group(1))
         if entry is None:
             continue
@@ -116,8 +116,7 @@ def parse_epub(data: bytes) -> list[dict]:
             body = None
         if body is not None:
             try:
-                root = parse_html(body)
-                text = root.text().strip()
+                text = parse_html(body).text().strip()
             except Exception:  # noqa: BLE001 — per-chapter isolation
                 text = None
         chapters.append({"chapter_no": no, "href": href,

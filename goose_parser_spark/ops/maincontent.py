@@ -23,14 +23,13 @@ execution profile as the rule-tree extractor (map-only, no shuffle).
 from __future__ import annotations
 
 import re
-import time
 from typing import TYPE_CHECKING
 
 from pyspark.sql.types import (
     DoubleType, LongType, StringType, StructField, StructType,
 )
 
-from goose_parser_spark.dom.parser import Element, parse_html
+from goose_parser_spark.dom.parser import Element, each_document, parse_html
 
 if TYPE_CHECKING:  # pragma: no cover
     from pyspark.sql import DataFrame
@@ -162,16 +161,13 @@ def extract_main_content(
             scores: list[float] = [0.0] * n
             parse_ns: list[int] = [0] * n
             errors: list[str | None] = [None] * n
-            for i in range(n):
-                t0 = time.perf_counter_ns()
+            for i in each_document(range(n), parse_ns):
                 try:
-                    raw = raws[i]
-                    if raw is None:
+                    if raws[i] is None:
                         raise ValueError("html is NULL")
-                    texts[i], scores[i] = main_content(raw)
+                    texts[i], scores[i] = main_content(raws[i])
                 except Exception as exc:  # noqa: BLE001 — I4 isolation
                     errors[i] = f"{type(exc).__name__}: {exc}"
-                parse_ns[i] = time.perf_counter_ns() - t0
             yield pa.RecordBatch.from_arrays([
                 urls,
                 pa.array(texts, type=pa.string()),
@@ -329,7 +325,7 @@ def extract_markdown(
             n = batch.num_rows
             mds: list[str | None] = [None] * n
             errors: list[str | None] = [None] * n
-            for i in range(n):
+            for i in each_document(range(n)):
                 try:
                     if raws[i] is None:
                         raise ValueError("html is NULL")
@@ -435,7 +431,7 @@ def extract_tables(
             o_nc: list[int | None] = []
             o_cells: list[str | None] = []
             o_err: list[str | None] = []
-            for url, raw in zip(urls, raws):
+            for url, raw in each_document(zip(urls, raws)):
                 try:
                     if raw is None:
                         raise ValueError("html is NULL")

@@ -722,6 +722,27 @@ def test_incremental_dedup_against_index(spark, docs):
     assert not any(n >= 200000 for n, _ in got)   # fresh docs not flagged
 
 
+def test_dedup_calls_pin_no_rdd(spark):
+    """minhash_lsh_dedup and dedup_against_index run once per streaming
+    micro-batch; repeated calls must not leave cached tables behind."""
+    from goose_parser_spark.ops.dedup import (
+        build_minhash_index, dedup_against_index, minhash_lsh_dedup)
+    words = [f"w{i}" for i in range(40)]
+    corpus = spark.createDataFrame(
+        [(i, " ".join(words[i:i + 12])) for i in range(20)],
+        "doc_id long, text string")
+    increment = corpus.selectExpr("doc_id + 1000 as doc_id",
+                                  "concat('new ', text) as text")
+    index = build_minhash_index(corpus)
+    jsc = spark.sparkContext._jsc
+    before = jsc.getPersistentRDDs().size()
+    for _ in range(2):
+        assert minhash_lsh_dedup(corpus, threshold=0.5).collect() != []
+        assert dedup_against_index(increment, index, corpus,
+                                   threshold=0.5).collect() != []
+    assert jsc.getPersistentRDDs().size() == before
+
+
 def test_url_canonicalize_cases(spark):
     from goose_parser_spark.ops.urls import (
         strip_tracking_params, url_canonicalize)
