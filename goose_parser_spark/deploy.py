@@ -1,8 +1,9 @@
 """Deployment helper: ship this package to executors.
 
-The compiled rule tree is pickled **by reference** into the
-mapInPandas closure, so executor Python workers must be able to
-``import goose_parser_spark``. On a real cluster that is
+Every Python stage (the extractor's mapInArrow, the
+``ops._rowmap.map_rows`` ops) pickles a closure that refers to this
+package's functions and classes **by reference**, so executor Python
+workers must be able to ``import goose_parser_spark``. On a real cluster that is
 ``spark-submit --py-files goose_parser_spark.zip`` (BASELINE.json:14);
 for programmatic use :func:`ship_package` builds the zip on the fly
 and registers it via ``sc.addPyFile`` — the same mechanism, no
@@ -51,11 +52,11 @@ def ship_package(spark) -> str | None:
     """Make this package importable on all executors of ``spark``.
 
     Idempotent per SparkContext (memoized). Returns the zip path that
-    was shipped, or None when already shipped. Called automatically by
-    every entry point that launches a Python UDF (extract,
-    extract_features), so library users never hit
-    ``ModuleNotFoundError`` on executors regardless of cwd; on real
-    clusters ``spark-submit --py-files`` makes this a no-op re-add.
+    was shipped, or None when already shipped. Called by every
+    builder of a Python stage (the extractor, ``map_rows``, the
+    main-content ops, the WARC reader and writer), so library users never hit ``ModuleNotFoundError`` on executors
+    regardless of cwd; on real clusters ``spark-submit --py-files``
+    makes this a no-op re-add.
     """
     sc = spark.sparkContext
     key = id(sc)

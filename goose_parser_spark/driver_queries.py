@@ -6094,8 +6094,8 @@ def q_pdf_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     """REAL PDF parsing under the value oracle (ops/layout.py
     parse_pdf_text): raw-stream single-page PDFs are authored JVM-side
     by pure string concat (escape → content → /Length via
-    octet_length), then the extractor parses them back inside
-    mapInPandas (a sanctioned Python point). The oracle predicts the
+    octet_length), then the extractor parses them back in its
+    ``map_rows`` stage (a sanctioned Python point). The oracle predicts the
     fixed point — page text must equal the document text byte-for-byte
     — so the whole object-scan → page-tree → content-stream →
     text-operator pipeline is value-gated, not just the plumbing."""

@@ -588,18 +588,14 @@ def brotli_text(df, payload_col: str = "payload", id_col: str = "doc_id",
     distributed as ``.br`` sidecars). One row per input row:
     ``id_col, wbits, content_len, text``; decode failures yield a
     single ``wbits = -1`` row with NULL content (I4 poison isolation
-    — same contract as the media codecs and zstd_text). Arrow-batched
-    mapInPandas; decode is the only Python node, the plan is map-only
-    (no shuffle), and ``max_out`` bounds per-doc inflation so a bomb
-    poisons its row instead of the executor."""
-    from collections.abc import Iterator as _Iter
-
-    import pandas as pd
+    — same contract as the media codecs and zstd_text). One
+    :func:`map_rows` stage; decode is the only Python node, the plan
+    is map-only (no shuffle), and ``max_out`` bounds per-doc
+    inflation so a bomb poisons its row instead of the executor."""
     from pyspark.sql.types import (
         IntegerType, LongType, StringType, StructField, StructType)
 
-    from goose_parser_spark.deploy import ship_package
-    ship_package(df.sparkSession)
+    from goose_parser_spark.ops._rowmap import map_rows
 
     out_schema = StructType([
         df.schema[id_col],
@@ -608,36 +604,17 @@ def brotli_text(df, payload_col: str = "payload", id_col: str = "doc_id",
         StructField("text", StringType(), True),
     ])
 
-    def run(batches: "_Iter[pd.DataFrame]") -> "_Iter[pd.DataFrame]":
-        for pdf in batches:
-            cols: dict[str, list] = {k: [] for k in (
-                "_id", "wbits", "content_len", "text")}
-            for doc_id, payload in zip(pdf[id_col], pdf[payload_col]):
-                if payload is None:
-                    continue
-                try:
-                    content, wbits = decompress_info(
-                        bytes(payload), max_out=max_out)
-                    text = content.decode("utf-8", "replace")
-                except BrotliError:
-                    cols["_id"].append(doc_id)
-                    cols["wbits"].append(-1)
-                    cols["content_len"].append(None)
-                    cols["text"].append(None)
-                    continue
-                cols["_id"].append(doc_id)
-                cols["wbits"].append(wbits)
-                cols["content_len"].append(len(content))
-                cols["text"].append(text)
-            yield pd.DataFrame({
-                id_col: cols["_id"],
-                "wbits": cols["wbits"],
-                "content_len": cols["content_len"],
-                "text": cols["text"],
-            })
+    def decode(doc_id, payload):
+        if payload is None:
+            return []
+        try:
+            content, wbits = decompress_info(payload, max_out=max_out)
+        except BrotliError:
+            return [(doc_id, -1, None, None)]
+        return [(doc_id, wbits, len(content),
+                 content.decode("utf-8", "replace"))]
 
-    return (df.select(id_col, payload_col)
-            .mapInPandas(run, schema=out_schema))
+    return map_rows(df, [id_col, payload_col], out_schema, decode)
 
 
 def is_brotli_plausible(data: bytes) -> bool:

@@ -16,7 +16,7 @@ browser sniffing ladder (WHATWG encoding standard, public spec):
    ``unicode_escape``…).
 4. Fallback windows-1252 (the browser default that never fails).
 
-Decoding runs Arrow-batched via mapInArrow — per-document Python by
+Decoding runs Arrow-batched via ``map_rows`` — per-document Python by
 nature (same sanctioned profile as the extraction/codec paths), map-
 only, no shuffle. Undecodable sequences are replaced, and the
 replacement count is surfaced so quality filters can gate on it.
@@ -94,46 +94,19 @@ def decode_html_bytes(
     id_col: str = "doc_id",
 ) -> "DataFrame":
     """Raw crawl bodies → ``(id, text, charset, n_replaced)``.
-    Map-only mapInArrow; NULL payloads yield NULL text with charset
-    ``'null'`` (countable, never fatal — I4)."""
-    from pyspark.sql.pandas.types import to_arrow_schema
+    Map-only :func:`map_rows` stage; NULL payloads yield NULL text
+    with charset ``'null'`` (countable, never fatal — I4)."""
+    from goose_parser_spark.ops._rowmap import map_rows
 
-    from goose_parser_spark.deploy import ship_package
-
-    ship_package(df.sparkSession)
     out_schema = StructType([
         df.schema[id_col],
         StructField("text", StringType(), True),
         StructField("charset", StringType(), False),
         StructField("n_replaced", IntegerType(), False),
     ])
-    arrow_schema = to_arrow_schema(out_schema)
+    def decode(doc_id, p):
+        if p is None:
+            return [(doc_id, None, "null", 0)]
+        return [(doc_id, *sniff_decode(p))]
 
-    def run(batches):
-        import pyarrow as pa
-        for batch in batches:
-            names = batch.schema.names
-            ids = batch.column(names.index(id_col))
-            payloads = batch.column(names.index(payload_col)).to_pylist()
-            texts: list[str | None] = []
-            charsets: list[str] = []
-            repl: list[int] = []
-            for p in payloads:
-                if p is None:
-                    texts.append(None)
-                    charsets.append("null")
-                    repl.append(0)
-                    continue
-                t, c, n = sniff_decode(bytes(p))
-                texts.append(t)
-                charsets.append(c)
-                repl.append(n)
-            yield pa.RecordBatch.from_arrays([
-                ids,
-                pa.array(texts, type=pa.string()),
-                pa.array(charsets, type=pa.string()),
-                pa.array(repl, type=pa.int32()),
-            ], schema=arrow_schema)
-
-    return df.select(id_col, payload_col).mapInArrow(
-        run, schema=out_schema)
+    return map_rows(df, [id_col, payload_col], out_schema, decode)

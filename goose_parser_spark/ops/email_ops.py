@@ -110,16 +110,14 @@ def mbox_messages(df: "DataFrame", payload_col: str = "payload",
     ``id_col, msg_no, subject, from_addr, date, body``. A document
     that is not an mbox yields the single ``msg_no = -1`` poison
     row; an individual unparseable message yields its NULL-body row.
-    Map-only Arrow-batched mapInPandas (MIME decode is per-document
+    Map-only :func:`map_rows` stage (MIME decode is per-document
     string work); mbox bytes never shuffle."""
-    import pandas as pd
-
     from pyspark.sql.types import (
         IntegerType, StringType, StructField, StructType,
     )
 
-    from goose_parser_spark.deploy import ship_package
-    ship_package(df.sparkSession)
+    from goose_parser_spark.ops._rowmap import map_rows
+
     out_schema = StructType([
         df.schema[id_col],
         StructField("msg_no", IntegerType(), False),
@@ -130,34 +128,20 @@ def mbox_messages(df: "DataFrame", payload_col: str = "payload",
     ])
     names = ("subject", "from_addr", "date", "body")
 
-    def run(batches):
-        for pdf in batches:
-            cols: dict[str, list] = {"_id": [], "msg_no": []}
-            for k in names:
-                cols[k] = []
+    def messages(pid, payload):
+        if payload is None:
+            return []
+        try:
+            msgs = list(iter_mbox(payload))
+        except ValueError:
+            return [(pid, -1, None, None, None, None)]
+        out = []
+        for no, raw in enumerate(msgs):
+            try:
+                rec = parse_email(raw)
+            except Exception:  # noqa: BLE001 — per-msg I4
+                rec = {}
+            out.append((pid, no, *(rec.get(k) for k in names)))
+        return out
 
-            def emit(pid, no, rec):
-                cols["_id"].append(pid)
-                cols["msg_no"].append(no)
-                for k in names:
-                    cols[k].append(rec.get(k))
-
-            for pid, payload in zip(pdf[id_col], pdf[payload_col]):
-                if payload is None:
-                    continue
-                try:
-                    msgs = list(iter_mbox(bytes(payload)))
-                except ValueError:
-                    emit(pid, -1, {})
-                    continue
-                for no, raw in enumerate(msgs):
-                    try:
-                        emit(pid, no, parse_email(raw))
-                    except Exception:  # noqa: BLE001 — per-msg I4
-                        emit(pid, no, {})
-            out = pd.DataFrame(cols)
-            out.columns = [id_col] + list(out.columns[1:])
-            yield out
-
-    return df.select(id_col, payload_col).mapInPandas(
-        run, schema=out_schema)
+    return map_rows(df, [id_col, payload_col], out_schema, messages)

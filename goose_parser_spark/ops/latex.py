@@ -218,46 +218,29 @@ def latex_to_text(s: str) -> str:
 
 def latex_clean(df: "DataFrame", text_col: str = "tex",
                 id_col: str = "doc_id") -> "DataFrame":
-    """LaTeX → plain text at corpus scale: map-only Arrow-batched
-    mapInPandas (per-document string work), one row per input with
+    """LaTeX → plain text at corpus scale: map-only :func:`map_rows`
+    stage (per-document string work), one row per input with
     ``clean_text`` and ``n_math`` (count of dropped inline-math
     spans — a domain signal: heavy-math sources need different
     tokenizer budgets). NULL clean_text on failure (I4)."""
-    import pandas as pd
-
     from pyspark.sql.types import (
         IntegerType, StringType, StructField, StructType,
     )
 
-    from goose_parser_spark.deploy import ship_package
-    ship_package(df.sparkSession)
+    from goose_parser_spark.ops._rowmap import map_rows
+
     out_schema = StructType([
         df.schema[id_col],
         StructField("clean_text", StringType(), True),
         StructField("n_math", IntegerType(), True),
     ])
 
-    def run(batches):
-        for pdf in batches:
-            ids: list = []
-            texts: list = []
-            maths: list = []
-            for pid, tex in zip(pdf[id_col], pdf[text_col]):
-                if tex is None:
-                    continue
-                ids.append(pid)
-                try:
-                    t = str(tex)
-                    texts.append(latex_to_text(t))
-                    maths.append(len(re.findall(
-                        r"(?<!\\)\$(?:[^$\\]|\\.)+\$", t)))
-                except Exception:  # noqa: BLE001 — I4 isolation
-                    texts.append(None)
-                    maths.append(None)
-            out = pd.DataFrame({"_id": ids, "clean_text": texts,
-                                "n_math": maths})
-            out.columns = [id_col] + list(out.columns[1:])
-            yield out
+    def clean(pid, tex):
+        if tex is None:
+            return []
+        t = str(tex)
+        return [(pid, latex_to_text(t),
+                 len(re.findall(r"(?<!\\)\$(?:[^$\\]|\\.)+\$", t)))]
 
-    return df.select(id_col, text_col).mapInPandas(
-        run, schema=out_schema)
+    return map_rows(df, [id_col, text_col], out_schema, clean,
+                    poison=lambda pid, tex, exc: [(pid, None, None)])

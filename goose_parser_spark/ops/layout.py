@@ -30,12 +30,11 @@ from __future__ import annotations
 
 import re
 import zlib
-from collections.abc import Iterator
 from typing import TYPE_CHECKING
 
-import pandas as pd
-
 from pyspark.sql.types import IntegerType, LongType, StringType, StructField, StructType
+
+from goose_parser_spark.ops._rowmap import map_rows
 
 if TYPE_CHECKING:  # pragma: no cover
     from pyspark.sql import DataFrame
@@ -895,9 +894,6 @@ def extract_pdf_pages(
     The explode happens inside the Python worker (a parsed page list
     never crosses the boundary twice); output rows are narrow.
     """
-    from goose_parser_spark.deploy import ship_package
-    ship_package(df.sparkSession)
-
     out_schema = StructType([
         df.schema[id_col],
         StructField("page_no", IntegerType(), False),
@@ -905,40 +901,19 @@ def extract_pdf_pages(
         StructField("n_pages", IntegerType(), False),
     ])
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids: list[object] = []
-            page_nos: list[int] = []
-            texts: list[str] = []
-            n_pages_col: list[int] = []
-            for doc_id, payload in zip(pdf[id_col], pdf[payload_col]):
-                if payload is None:
-                    continue
-                raw = bytes(payload)
-                try:
-                    if raw.startswith(b"%PDF-"):
-                        pages = parse_pdf_text(raw)
-                    else:
-                        pages = parse_pdf_stub(raw)
-                except Exception:  # noqa: BLE001 — I4 poison isolation
-                    ids.append(doc_id)
-                    page_nos.append(-1)
-                    texts.append(None)
-                    n_pages_col.append(0)
-                    continue
-                for pno, ptext in enumerate(pages):
-                    ids.append(doc_id)
-                    page_nos.append(pno)
-                    texts.append(ptext)
-                    n_pages_col.append(len(pages))
-            yield pd.DataFrame({
-                id_col: pd.Series(ids),
-                "page_no": pd.Series(page_nos, dtype="int32"),
-                "page_text": pd.Series(texts, dtype="object"),
-                "n_pages": pd.Series(n_pages_col, dtype="int32"),
-            })
+    def pages(doc_id, raw):
+        if raw is None:
+            return []
+        if raw.startswith(b"%PDF-"):
+            texts = parse_pdf_text(raw)
+        else:
+            texts = parse_pdf_stub(raw)
+        return [(doc_id, pno, ptext, len(texts))
+                for pno, ptext in enumerate(texts)]
 
-    return df.select(id_col, payload_col).mapInPandas(run, schema=out_schema)
+    return map_rows(df, [id_col, payload_col], out_schema, pages,
+                    poison=lambda doc_id, raw, exc:
+                    [(doc_id, -1, None, 0)])
 
 
 # ---------------------------------------------------------------------------
@@ -1047,11 +1022,9 @@ def pdf_metadata(
 ) -> "DataFrame":
     """Binary PDF payloads → one metadata row per document:
     ``(id, n_pages, title, author, subject, producer, created,
-    error)``. Map-only mapInPandas, per-document poison isolation
-    (I4): a failing parse yields n_pages = -1 and the error string."""
-    from goose_parser_spark.deploy import ship_package
-    ship_package(df.sparkSession)
-
+    error)``. Map-only :func:`map_rows` stage, per-document poison
+    isolation (I4): a failing parse yields n_pages = -1 and the error
+    string."""
     out_schema = StructType([
         df.schema[id_col],
         StructField("n_pages", IntegerType(), False),
@@ -1063,37 +1036,19 @@ def pdf_metadata(
         StructField("error", StringType(), True),
     ])
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows: dict[str, list] = {k: [] for k in (
-                id_col, "n_pages", "title", "author", "subject",
-                "producer", "created", "error")}
-            for doc_id, payload in zip(pdf[id_col], pdf[payload_col]):
-                if payload is None:
-                    continue
-                rows[id_col].append(doc_id)
-                try:
-                    info = parse_pdf_info(bytes(payload))
-                    rows["n_pages"].append(info["n_pages"])
-                    for k in ("title", "author", "subject", "producer",
-                              "created"):
-                        rows[k].append(info[k])
-                    rows["error"].append(None)
-                except Exception as exc:  # noqa: BLE001 — I4 isolation
-                    rows["n_pages"].append(-1)
-                    for k in ("title", "author", "subject", "producer",
-                              "created"):
-                        rows[k].append(None)
-                    rows["error"].append(f"{type(exc).__name__}: {exc}")
-            yield pd.DataFrame({
-                id_col: pd.Series(rows[id_col]),
-                "n_pages": pd.Series(rows["n_pages"], dtype="int32"),
-                **{k: pd.Series(rows[k], dtype="object")
-                   for k in ("title", "author", "subject", "producer",
-                             "created", "error")},
-            })
+    fields = ("n_pages", "title", "author", "subject", "producer",
+              "created")
 
-    return df.select(id_col, payload_col).mapInPandas(run, schema=out_schema)
+    def info(doc_id, payload):
+        if payload is None:
+            return []
+        meta = parse_pdf_info(payload)
+        return [(doc_id, *(meta[k] for k in fields), None)]
+
+    return map_rows(df, [id_col, payload_col], out_schema, info,
+                    poison=lambda doc_id, payload, exc:
+                    [(doc_id, -1, None, None, None, None, None,
+                      f"{type(exc).__name__}: {exc}")])
 
 
 def pdf_images(
@@ -1111,13 +1066,14 @@ def pdf_images(
     ``image_no = -1`` poison row (same I4 convention as
     extract_pdf_pages).
 
-    100-TB shape: the parse+decode is the only Python node, map-only
-    Arrow-batched mapInPandas — payload bytes never shuffle; the DCT
-    hash is pure Catalyst downstream."""
-    from goose_parser_spark.deploy import ship_package
-    from goose_parser_spark.ops.multimodal import _phash_from_pixel_cols
-    ship_package(df.sparkSession)
+    100-TB shape: the parse+decode is the only Python node, one
+    map-only :func:`map_rows` stage — payload bytes never shuffle;
+    the DCT hash is pure Catalyst downstream."""
     from pyspark.sql.types import BooleanType
+
+    from goose_parser_spark.ops.imagecodec import resize_gray_box
+    from goose_parser_spark.ops.multimodal import (
+        _ZEROS, _phash_from_pixel_cols)
 
     grid_schema = StructType(
         [df.schema[id_col],
@@ -1129,54 +1085,25 @@ def pdf_images(
         + [StructField(f"_p{k}", IntegerType(), True)
            for k in range(64)])
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from goose_parser_spark.ops.imagecodec import resize_gray_box
-        zeros = [0] * 64
-        for pdf in batches:
-            cols: dict[str, list] = {"_id": [], "image_no": [],
-                                     "width": [], "height": [],
-                                     "fmt": [], "_ok": []}
-            for k in range(64):
-                cols[f"_p{k}"] = []
+    def images(doc_id, payload):
+        if payload is None:
+            return []
+        out = []
+        for img in parse_pdf_images(payload):
+            head = (doc_id, img["image_no"], img["width"], img["height"],
+                    img["fmt"])
+            try:
+                if img["pixels"] is None:
+                    raise ValueError("undecodable image")
+                out.append((*head, True, *resize_gray_box(
+                    img["width"], img["height"], img["pixels"])))
+            except Exception:  # noqa: BLE001 — per-image I4
+                out.append((*head, False, *_ZEROS))
+        return out
 
-            def emit(doc_id, no, w, h, fmt, ok, grid):
-                cols["_id"].append(doc_id)
-                cols["image_no"].append(no)
-                cols["width"].append(w)
-                cols["height"].append(h)
-                cols["fmt"].append(fmt)
-                cols["_ok"].append(ok)
-                for k in range(64):
-                    cols[f"_p{k}"].append(grid[k])
-
-            for doc_id, payload in zip(pdf[id_col], pdf[payload_col]):
-                if payload is None:
-                    continue
-                try:
-                    images = parse_pdf_images(bytes(payload))
-                except Exception:  # noqa: BLE001 — per-doc I4
-                    emit(doc_id, -1, None, None, None, False, zeros)
-                    continue
-                for img in images:
-                    px = img["pixels"]
-                    if px is None:
-                        emit(doc_id, img["image_no"], img["width"],
-                             img["height"], img["fmt"], False, zeros)
-                        continue
-                    try:
-                        grid = resize_gray_box(
-                            img["width"], img["height"], px)
-                        emit(doc_id, img["image_no"], img["width"],
-                             img["height"], img["fmt"], True, grid)
-                    except Exception:  # noqa: BLE001 — per-image I4
-                        emit(doc_id, img["image_no"], img["width"],
-                             img["height"], img["fmt"], False, zeros)
-            out = pd.DataFrame(cols)
-            out.columns = [id_col] + list(out.columns[1:])
-            yield out
-
-    base = df.select(id_col, payload_col).mapInPandas(
-        run, schema=grid_schema)
+    base = map_rows(df, [id_col, payload_col], grid_schema, images,
+                    poison=lambda doc_id, payload, exc:
+                    [(doc_id, -1, None, None, None, False, *_ZEROS)])
     return _phash_from_pixel_cols(
         base, id_col, "phash", valid_col="_ok",
         extra_cols=("image_no", "width", "height", "fmt"))

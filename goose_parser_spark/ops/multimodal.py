@@ -1,9 +1,10 @@
 """Multimodal column plumbing: opaque binary payloads + typed metadata.
 
 Images/audio/video travel as ``binary`` columns with a metadata
-struct; decode / feature-extract / resize / frame-sample run as
-Arrow-batched ``mapInPandas`` so payload bytes cross the JVM↔Python
-boundary once per batch.
+struct; decode / feature-extract / resize / frame-sample run per row
+through :func:`goose_parser_spark.ops._rowmap.map_rows` (Arrow
+batches), so payload bytes cross the JVM↔Python boundary once per
+batch.
 
 Codec status: PNG / GIF / TIFF / BMP / binary PPM-PGM / JPEG
 (baseline + progressive) / lossless WebP (VP8L) image decode,
@@ -30,14 +31,13 @@ from __future__ import annotations
 
 import hashlib
 import math
-from collections.abc import Iterator
-
-import pandas as pd
 
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.types import (
     ArrayType, FloatType, LongType, StringType, StructField, StructType,
 )
+
+from goose_parser_spark.ops._rowmap import map_rows
 
 MEDIA_META_SCHEMA = StructType([
     StructField("media_type", StringType(), True),   # image|audio|video
@@ -108,31 +108,21 @@ def extract_features(
 ) -> DataFrame:
     """Arrow-batched feature extraction over binary payloads.
 
-    Output: ``id_col, n_bytes, features: array<float>``. The UDF sees
-    whole Arrow batches; per-batch it vectorizes what it can and loops
-    only over the opaque byte blobs (unavoidable for codecs).
+    Output: ``id_col, n_bytes, features: array<float>``; a NULL
+    payload gives ``n_bytes = 0`` and NULL features.
     """
-    from goose_parser_spark.deploy import ship_package
-    ship_package(df.sparkSession)
-
     out_schema = StructType([
         df.schema[id_col],
         StructField("n_bytes", LongType(), False),
         FEATURES_FIELD,
     ])
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = pdf[payload_col]
-            yield pd.DataFrame({
-                id_col: pdf[id_col].reset_index(drop=True),
-                "n_bytes": payloads.map(lambda b: len(b) if b is not None else 0)
-                                   .astype("int64"),
-                "features": payloads.map(
-                    lambda b: decode_stub(bytes(b)) if b is not None else None),
-            })
+    def features(doc_id, b):
+        if b is None:
+            return [(doc_id, 0, None)]
+        return [(doc_id, len(b), decode_stub(b))]
 
-    return df.select(id_col, payload_col).mapInPandas(run, schema=out_schema)
+    return map_rows(df, [id_col, payload_col], out_schema, features)
 
 
 # ---------------------------------------------------------------------------
@@ -220,6 +210,10 @@ def phash_dct(
         pix_exprs.append(f"{p} AS _p{k}")
     base = digs.selectExpr(iq, "_ok", *pix_exprs)
     return _phash_from_pixel_cols(base, id_col, out_col, valid_col="_ok")
+
+
+# the 8x8 grid of a row whose decode failed (its hash is NULL)
+_ZEROS = (0,) * 64
 
 
 def _phash_from_pixel_cols(base: DataFrame, id_col: str, out_col: str,
@@ -320,48 +314,32 @@ def phash_image(
     """pHash over REAL image decode: PNG / GIF / TIFF / BMP / binary
     PPM-PGM / JPEG / WebP (VP8L and lossy VP8) payloads are decoded
     with the pure-stdlib codecs in ops/imagecodec.py, box-averaged
-    to the 8x8 grayscale grid inside an Arrow-batched mapInPandas
-    (the sanctioned per-document Python point — bytes cross the
-    boundary once per batch), and the grid feeds the SAME Catalyst
+    to the 8x8 grayscale grid in the per-row Python stage
+    (:func:`map_rows` — bytes cross the boundary once per batch),
+    and the grid feeds the SAME Catalyst
     DCT/median/bit pipeline as :func:`phash_dct`. Undecodable
     payloads (AVIF, truncated files) yield a NULL hash instead of
     failing the batch (I4).
 
     Columns: ``id_col, out_col`` (60-bit long; NULL = decode failed).
     """
-    from goose_parser_spark.deploy import ship_package
-    ship_package(df.sparkSession)
-    from pyspark.sql.types import IntegerType
+    from pyspark.sql.types import BooleanType, IntegerType
 
-    from pyspark.sql.types import BooleanType
+    from goose_parser_spark.ops.imagecodec import (
+        decode_image_gray, resize_gray_box)
 
     grid_schema = StructType(
         [df.schema[id_col], StructField("_ok", BooleanType(), False)]
         + [StructField(f"_p{k}", IntegerType(), True) for k in range(64)])
 
-    def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from goose_parser_spark.ops.imagecodec import (
-            decode_image_gray, resize_gray_box)
-        for pdf in batches:
-            cols: dict[str, list] = {id_col: [], "_ok": []}
-            for k in range(64):
-                cols[f"_p{k}"] = []
-            for doc_id, payload in zip(pdf[id_col], pdf[payload_col]):
-                try:  # a NULL payload fails here too: NULL hash
-                    w, h, px = decode_image_gray(bytes(payload))
-                    grid = resize_gray_box(w, h, px)
-                    ok = True
-                except Exception:  # noqa: BLE001 — I4 poison isolation
-                    grid = [0] * 64
-                    ok = False
-                cols[id_col].append(doc_id)
-                cols["_ok"].append(ok)
-                for k in range(64):
-                    cols[f"_p{k}"].append(grid[k])
-            yield pd.DataFrame(cols)
+    def grid(doc_id, payload):
+        # a NULL payload fails here too: NULL hash
+        w, h, px = decode_image_gray(payload)
+        return [(doc_id, True, *resize_gray_box(w, h, px))]
 
-    base = df.select(id_col, payload_col).mapInPandas(
-        decode, schema=grid_schema)
+    base = map_rows(df, [id_col, payload_col], grid_schema, grid,
+                    poison=lambda doc_id, payload, exc:
+                    [(doc_id, False, *_ZEROS)])
     return _phash_from_pixel_cols(base, id_col, out_col, valid_col="_ok")
 
 
@@ -394,19 +372,21 @@ def video_frames(
     hash/dims; container-level failures (not an AVI, truncated RIFF)
     yield a single ``frame_no = -1`` poison row (I4) — per-document
     isolation either way. The only Python is the per-document
-    container walk + pixel decode inside one Arrow-batched
-    mapInPandas (map-only, no shuffle); everything after the 64
-    grayscale columns is whole-stage-codegen Catalyst.
+    container walk + pixel decode inside one :func:`map_rows` stage
+    (map-only, no shuffle); everything after the 64 grayscale
+    columns is whole-stage-codegen Catalyst.
 
-    100-TB shape: payload bytes never shuffle — the mapInPandas runs
+    100-TB shape: payload bytes never shuffle — the row map runs
     on the scan partitioning and emits 64 ints + dims per sampled
     frame (~300 bytes), so downstream joins move fingerprints, not
     video."""
     if every < 1:
         raise ValueError("every must be >= 1")
-    from goose_parser_spark.deploy import ship_package
-    ship_package(df.sparkSession)
     from pyspark.sql.types import BooleanType, IntegerType
+
+    from goose_parser_spark.ops.imagecodec import (
+        avi_video_chunks, decode_image_gray, gif_frames_gray,
+        resize_gray_box, webp_frames_gray)
 
     grid_schema = StructType(
         [df.schema[id_col],
@@ -416,68 +396,38 @@ def video_frames(
          StructField("_ok", BooleanType(), False)]
         + [StructField(f"_p{k}", IntegerType(), True) for k in range(64)])
 
-    def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from goose_parser_spark.ops.imagecodec import (
-            avi_video_chunks, decode_image_gray, gif_frames_gray,
-            resize_gray_box, webp_frames_gray)
-        for pdf in batches:
-            cols: dict[str, list] = {
-                id_col: [], "frame_no": [], "width": [], "height": [],
-                "_ok": []}
-            for k in range(64):
-                cols[f"_p{k}"] = []
+    def frames(doc_id, raw):
+        if raw is None:
+            return []
+        composer = None
+        if raw[:6] in (b"GIF87a", b"GIF89a"):
+            composer = gif_frames_gray
+        elif raw[:4] == b"RIFF" and raw[8:12] == b"WEBP":
+            composer = webp_frames_gray
+        if composer is None:
+            _, items = avi_video_chunks(raw)
+            decode = decode_image_gray
+        else:
+            # animation: sample the COMPOSED canvases
+            w, h, items = composer(raw)
 
-            def emit(doc_id, fno, w, h, ok, grid):
-                cols[id_col].append(doc_id)
-                cols["frame_no"].append(fno)
-                cols["width"].append(w)
-                cols["height"].append(h)
-                cols["_ok"].append(ok)
-                for k in range(64):
-                    cols[f"_p{k}"].append(grid[k])
+            def decode(canvas):
+                if canvas is None:  # lossy sub-frame
+                    raise ValueError("undecodable frame")
+                return w, h, canvas
+        out = []
+        for fno in range(0, len(items), every):
+            try:
+                fw, fh, px = decode(items[fno])
+                out.append((doc_id, fno, fw, fh, True,
+                            *resize_gray_box(fw, fh, px)))
+            except Exception:  # noqa: BLE001 — per-frame I4
+                out.append((doc_id, fno, None, None, False, *_ZEROS))
+        return out
 
-            zeros = [0] * 64
-            for doc_id, payload in zip(pdf[id_col], pdf[payload_col]):
-                if payload is None:
-                    continue
-                raw = bytes(payload)
-                composer = None
-                if raw[:6] in (b"GIF87a", b"GIF89a"):
-                    composer = gif_frames_gray
-                elif raw[:4] == b"RIFF" and raw[8:12] == b"WEBP":
-                    composer = webp_frames_gray
-                if composer is not None:
-                    # animation: sample the COMPOSED canvases
-                    try:
-                        w, h, frames = composer(raw)
-                    except Exception:  # noqa: BLE001 — I4 isolation
-                        emit(doc_id, -1, None, None, False, zeros)
-                        continue
-                    for fno in range(0, len(frames), every):
-                        try:
-                            if frames[fno] is None:  # lossy sub-frame
-                                raise ValueError("undecodable frame")
-                            emit(doc_id, fno, w, h, True,
-                                 resize_gray_box(w, h, frames[fno]))
-                        except Exception:  # noqa: BLE001 — per-frame
-                            emit(doc_id, fno, None, None, False, zeros)
-                    continue
-                try:
-                    _, chunks = avi_video_chunks(raw)
-                except Exception:  # noqa: BLE001 — I4 poison isolation
-                    emit(doc_id, -1, None, None, False, zeros)
-                    continue
-                for fno in range(0, len(chunks), every):
-                    try:
-                        w, h, px = decode_image_gray(chunks[fno])
-                        emit(doc_id, fno, w, h, True,
-                             resize_gray_box(w, h, px))
-                    except Exception:  # noqa: BLE001 — per-frame I4
-                        emit(doc_id, fno, None, None, False, zeros)
-            yield pd.DataFrame(cols)
-
-    base = df.select(id_col, payload_col).mapInPandas(
-        decode, schema=grid_schema)
+    base = map_rows(df, [id_col, payload_col], grid_schema, frames,
+                    poison=lambda doc_id, raw, exc:
+                    [(doc_id, -1, None, None, False, *_ZEROS)])
     return _phash_from_pixel_cols(
         base, id_col, out_col, valid_col="_ok",
         extra_cols=("frame_no", "width", "height"))
@@ -500,13 +450,14 @@ def audio_features(
     One row per frame: ``id_col, sample_rate, n_channels, frame_no,
     energy, zero_crossings``. Compressed codecs (MP3/AAC/Vorbis) and
     malformed files yield a single ``frame_no = -1`` row with NULL
-    features (I4 poison isolation). Arrow-batched mapInPandas —
+    features (I4 poison isolation). Runs through :func:`map_rows` —
     payload bytes cross the boundary once per batch; frames explode
     inside the worker.
     """
-    from goose_parser_spark.deploy import ship_package
-    ship_package(df.sparkSession)
     from pyspark.sql.types import IntegerType, LongType
+
+    from goose_parser_spark.ops.imagecodec import (
+        audio_frame_features, decode_audio_pcm)
 
     out_schema = StructType([
         df.schema[id_col],
@@ -517,40 +468,17 @@ def audio_features(
         StructField("zero_crossings", IntegerType(), True),
     ])
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from goose_parser_spark.ops.imagecodec import (
-            audio_frame_features, decode_audio_pcm)
-        for pdf in batches:
-            cols = {k: [] for k in ("_id", "sample_rate", "n_channels",
-                                    "frame_no", "energy",
-                                    "zero_crossings")}
-            for doc_id, payload in zip(pdf[id_col], pdf[payload_col]):
-                if payload is None:
-                    continue
-                try:
-                    rate, ch, samples = decode_audio_pcm(bytes(payload))
-                    feats = audio_frame_features(samples, frame=frame)
-                except Exception:  # noqa: BLE001 — I4 poison isolation
-                    cols["_id"].append(doc_id)
-                    cols["sample_rate"].append(None)
-                    cols["n_channels"].append(None)
-                    cols["frame_no"].append(-1)
-                    cols["energy"].append(None)
-                    cols["zero_crossings"].append(None)
-                    continue
-                for fno, (energy, zc) in enumerate(feats):
-                    cols["_id"].append(doc_id)
-                    cols["sample_rate"].append(rate)
-                    cols["n_channels"].append(ch)
-                    cols["frame_no"].append(fno)
-                    cols["energy"].append(energy)
-                    cols["zero_crossings"].append(zc)
-            out = pd.DataFrame(cols)
-            out.columns = [id_col] + list(out.columns[1:])
-            yield out
+    def frames(doc_id, payload):
+        if payload is None:
+            return []
+        rate, ch, samples = decode_audio_pcm(payload)
+        feats = audio_frame_features(samples, frame=frame)
+        return [(doc_id, rate, ch, fno, energy, zc)
+                for fno, (energy, zc) in enumerate(feats)]
 
-    return df.select(id_col, payload_col).mapInPandas(
-        run, schema=out_schema)
+    return map_rows(df, [id_col, payload_col], out_schema, frames,
+                    poison=lambda doc_id, payload, exc:
+                    [(doc_id, None, None, -1, None, None)])
 
 
 def exif_metadata(
@@ -568,9 +496,9 @@ def exif_metadata(
     has_gps``; non-JPEG / EXIF-less payloads yield an all-NULL row
     (I4). Map-only Arrow-batched scan — a few hundred header bytes
     per doc, no decode, no shuffle."""
-    from goose_parser_spark.deploy import ship_package
-    ship_package(df.sparkSession)
     from pyspark.sql.types import BooleanType, IntegerType
+
+    from goose_parser_spark.ops.imagecodec import parse_exif
 
     out_schema = StructType([
         df.schema[id_col],
@@ -585,28 +513,15 @@ def exif_metadata(
     names = ["make", "model", "orientation", "datetime_original",
              "exif_width", "exif_height", "has_gps"]
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from goose_parser_spark.ops.imagecodec import parse_exif
-        for pdf in batches:
-            cols: dict[str, list] = {"_id": []}
-            for k in names:
-                cols[k] = []
-            for doc_id, payload in zip(pdf[id_col], pdf[payload_col]):
-                if payload is None:
-                    continue
-                try:
-                    meta = parse_exif(bytes(payload))
-                except Exception:  # noqa: BLE001 — I4 poison isolation
-                    meta = dict.fromkeys(names)
-                cols["_id"].append(doc_id)
-                for k in names:
-                    cols[k].append(meta.get(k))
-            out = pd.DataFrame(cols)
-            out.columns = [id_col] + list(out.columns[1:])
-            yield out
+    def exif(doc_id, payload):
+        if payload is None:
+            return []
+        meta = parse_exif(payload)
+        return [(doc_id, *(meta.get(k) for k in names))]
 
-    return df.select(id_col, payload_col).mapInPandas(
-        run, schema=out_schema)
+    return map_rows(df, [id_col, payload_col], out_schema, exif,
+                    poison=lambda doc_id, payload, exc:
+                    [(doc_id,) + (None,) * len(names)])
 
 
 def audio_fingerprint(
@@ -669,8 +584,7 @@ def id3_metadata(
     One row per document: ``id_col, title, artist, album``; payloads
     without an ID3v2 tag yield an all-NULL row (I4). Map-only
     Arrow-batched header scan, no shuffle."""
-    from goose_parser_spark.deploy import ship_package
-    ship_package(df.sparkSession)
+    from goose_parser_spark.ops.imagecodec import parse_id3
 
     out_schema = StructType([
         df.schema[id_col],
@@ -679,27 +593,16 @@ def id3_metadata(
         StructField("album", StringType(), True),
     ])
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from goose_parser_spark.ops.imagecodec import parse_id3
-        for pdf in batches:
-            cols: dict[str, list] = {"_id": [], "title": [],
-                                     "artist": [], "album": []}
-            for doc_id, payload in zip(pdf[id_col], pdf[payload_col]):
-                if payload is None:
-                    continue
-                try:
-                    meta = parse_id3(bytes(payload))
-                except Exception:  # noqa: BLE001 — I4 poison isolation
-                    meta = {}
-                cols["_id"].append(doc_id)
-                for k in ("title", "artist", "album"):
-                    cols[k].append(meta.get(k))
-            out = pd.DataFrame(cols)
-            out.columns = [id_col] + list(out.columns[1:])
-            yield out
+    def id3(doc_id, payload):
+        if payload is None:
+            return []
+        meta = parse_id3(payload)
+        return [(doc_id, meta.get("title"), meta.get("artist"),
+                 meta.get("album"))]
 
-    return df.select(id_col, payload_col).mapInPandas(
-        run, schema=out_schema)
+    return map_rows(df, [id_col, payload_col], out_schema, id3,
+                    poison=lambda doc_id, payload, exc:
+                    [(doc_id, None, None, None)])
 
 
 def media_probe(
@@ -716,9 +619,9 @@ def media_probe(
     whose pixel decode needs codec libraries. Unrecognized payloads
     yield a NULL-format row (I4). Columns: ``id_col, format, width,
     height, duration_ms``."""
-    from goose_parser_spark.deploy import ship_package
-    ship_package(df.sparkSession)
     from pyspark.sql.types import IntegerType, LongType
+
+    from goose_parser_spark.ops.imagecodec import probe_media
 
     out_schema = StructType([
         df.schema[id_col],
@@ -728,29 +631,14 @@ def media_probe(
         StructField("duration_ms", LongType(), True),
     ])
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from goose_parser_spark.ops.imagecodec import probe_media
-        for pdf in batches:
-            cols = {k: [] for k in ("_id", "format", "width", "height",
-                                    "duration_ms")}
-            for doc_id, payload in zip(pdf[id_col], pdf[payload_col]):
-                if payload is None:
-                    continue
-                try:
-                    fmt, w, h, dur = probe_media(bytes(payload))
-                except Exception:  # noqa: BLE001 — I4 poison isolation
-                    fmt = w = h = dur = None
-                cols["_id"].append(doc_id)
-                cols["format"].append(fmt)
-                cols["width"].append(w)
-                cols["height"].append(h)
-                cols["duration_ms"].append(dur)
-            out = pd.DataFrame(cols)
-            out.columns = [id_col] + list(out.columns[1:])
-            yield out
+    def probe(doc_id, payload):
+        if payload is None:
+            return []
+        return [(doc_id, *probe_media(payload))]
 
-    return df.select(id_col, payload_col).mapInPandas(
-        run, schema=out_schema)
+    return map_rows(df, [id_col, payload_col], out_schema, probe,
+                    poison=lambda doc_id, payload, exc:
+                    [(doc_id, None, None, None, None)])
 
 
 def vp8_luma(
@@ -768,12 +656,12 @@ def vp8_luma(
     image pipeline computes from RGB). Malformed payloads yield a
     NULL-luma row (I4 poison isolation).
 
-    100-TB shape: map-only Arrow-batched mapInPandas, no shuffle;
+    100-TB shape: map-only :func:`map_rows` stage, no shuffle;
     payload bytes cross the JVM↔Python boundary once and downstream
     consumers hash or grid the luma without reshuffling bodies."""
-    from goose_parser_spark.deploy import ship_package
-    ship_package(df.sparkSession)
     from pyspark.sql.types import BinaryType, IntegerType
+
+    from goose_parser_spark.ops.vp8 import decode_vp8
 
     out_schema = StructType([
         df.schema[id_col],
@@ -782,26 +670,12 @@ def vp8_luma(
         StructField("luma", BinaryType(), True),
     ])
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from goose_parser_spark.ops.vp8 import decode_vp8
-        for pdf in batches:
-            cols: dict[str, list] = {"_id": [], "width": [],
-                                     "height": [], "luma": []}
-            for doc_id, payload in zip(pdf[id_col], pdf[payload_col]):
-                if payload is None:
-                    continue
-                try:
-                    w, h, y, _u, _v = decode_vp8(bytes(payload))
-                except Exception:  # noqa: BLE001 — I4 poison isolation
-                    w = h = None
-                    y = None
-                cols["_id"].append(doc_id)
-                cols["width"].append(w)
-                cols["height"].append(h)
-                cols["luma"].append(y)
-            out = pd.DataFrame(cols)
-            out.columns = [id_col] + list(out.columns[1:])
-            yield out
+    def luma(doc_id, payload):
+        if payload is None:
+            return []
+        w, h, y, _u, _v = decode_vp8(payload)
+        return [(doc_id, w, h, y)]
 
-    return df.select(id_col, payload_col).mapInPandas(
-        run, schema=out_schema)
+    return map_rows(df, [id_col, payload_col], out_schema, luma,
+                    poison=lambda doc_id, payload, exc:
+                    [(doc_id, None, None, None)])

@@ -5,7 +5,7 @@ fetching/processing. Two stages, split by what scales:
 
 - :func:`parse_robots` — robots.txt bodies → a (host, rule, prefix)
   RULES TABLE. Parsing is sequential line-state (user-agent groups),
-  so it runs in an Arrow-batched ``mapInPandas`` — but over the
+  so it runs as a per-row Python stage (``map_rows``) — but over the
   robots table, which is bounded by the number of HOSTS (millions),
   not documents (trillions). One small text per host.
 - :func:`robots_filter` — the per-document hot path, pure Catalyst
@@ -22,10 +22,12 @@ case-insensitively, falling back to the ``*`` group.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+import math
 
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.types import StringType, StructField, StructType
+
+from goose_parser_spark.ops._rowmap import map_rows
 
 RULES_SCHEMA = StructType([
     StructField("host", StringType(), False),
@@ -74,21 +76,13 @@ def parse_robots(
 ) -> DataFrame:
     """robots bodies → rules table (host, rule, prefix); hosts whose
     robots yields no rules for ``agent`` produce no rows (allow-all)."""
-    def run(batches: Iterator) -> Iterator:
-        import pandas as pd
-        for pdf in batches:
-            hosts, rules, prefixes = [], [], []
-            for h, body in zip(pdf[host_col], pdf[body_col]):
-                if h is None:
-                    continue
-                for rule, prefix in parse_robots_text(body or "", agent):
-                    hosts.append(h)
-                    rules.append(rule)
-                    prefixes.append(prefix)
-            yield pd.DataFrame(
-                {"host": hosts, "rule": rules, "prefix": prefixes})
+    def rules(h, body):
+        if h is None:
+            return []
+        return [(h, rule, prefix)
+                for rule, prefix in parse_robots_text(body or "", agent)]
 
-    return df.mapInPandas(run, schema=RULES_SCHEMA)
+    return map_rows(df, [host_col, body_col], RULES_SCHEMA, rules)
 
 
 def robots_filter(
@@ -162,8 +156,8 @@ def parse_robots_directives_text(
     override earlier ones). ANY non-``User-agent`` directive — not
     just allow/disallow/crawl-delay — terminates a run of consecutive
     ``User-agent`` lines, so an interleaved ``Sitemap:`` line does not
-    merge two groups the spec treats as distinct. Unparseable delay
-    values are ignored."""
+    merge two groups the spec treats as distinct. Unparseable and
+    non-finite (``nan``, ``inf``) delay values are ignored."""
     sitemaps: list[str] = []
     delays: dict[str, float] = {}
     current: list[str] = []
@@ -190,6 +184,8 @@ def parse_robots_directives_text(
                     d = float(val)
                 except ValueError:
                     continue
+                if not math.isfinite(d):
+                    continue
                 for a in current or ["*"]:
                     delays[a] = d
     delay = delays.get(agent.lower(), delays.get("*"))
@@ -206,7 +202,7 @@ def robots_directives(
     crawl_delay (double, NULL when unset)`` — the scheduler inputs
     (sitemap seeds feed :func:`goose_parser_spark.ops.crawl.
     sitemap_urls`; crawl_delay feeds per-host politeness budgets).
-    Map-only mapInPandas, one output row per input host."""
+    Map-only :func:`map_rows` stage, one output row per input host."""
     from pyspark.sql.types import (
         ArrayType, DoubleType, StringType, StructField, StructType,
     )
@@ -216,21 +212,12 @@ def robots_directives(
         StructField("crawl_delay", DoubleType(), True),
     ])
 
-    def run(batches: Iterator) -> Iterator:
-        import pandas as pd
-        for pdf in batches:
-            hosts, sms, delays = [], [], []
-            for h, body in zip(pdf[host_col], pdf[body_col]):
-                if h is None:
-                    continue
-                sm, d = parse_robots_directives_text(body or "", agent)
-                hosts.append(h)
-                sms.append(sm)
-                delays.append(d)
-            yield pd.DataFrame(
-                {"host": hosts, "sitemaps": sms, "crawl_delay": delays})
+    def directives(h, body):
+        if h is None:
+            return []
+        return [(h, *parse_robots_directives_text(body or "", agent))]
 
-    return df.mapInPandas(run, schema=schema)
+    return map_rows(df, [host_col, body_col], schema, directives)
 
 
 def robots_meta(

@@ -743,31 +743,31 @@ def normalize_text_nfc(
     them as different text).
 
     Spark has no built-in normalizer, so this is one of the few
-    sanctioned Python points: Arrow-batched ``mapInPandas`` over
+    sanctioned Python points: a ``map_rows`` stage over
     ``unicodedata.normalize`` (C-implemented, no per-row Python
     bytecode beyond the map call). The DuckDB oracle replays it with
     ``nfc_normalize`` — a genuine cross-library differential (CPython
     unicodedata vs DuckDB's utf8proc).
 
-    Columns: ``doc_id, text`` (normalized).
+    Columns: ``id_col, text_col`` (normalized; the id keeps its
+    type).
     """
-    from pyspark.sql.types import (LongType, StringType, StructField,
-                                   StructType)
+    import unicodedata
+
+    from pyspark.sql.types import StringType, StructField, StructType
+
+    from goose_parser_spark.ops._rowmap import map_rows
+
     schema = StructType([
-        StructField(id_col, LongType(), True),
+        df.schema[id_col],
         StructField(text_col, StringType(), True),
     ])
 
-    def run(batches):
-        import unicodedata
-        norm = unicodedata.normalize
-        for pdf in batches:
-            out = pdf[[id_col, text_col]].copy()
-            out[text_col] = out[text_col].map(
-                lambda t: norm("NFC", t) if t is not None else None)
-            yield out
+    def nfc(doc_id, t):
+        return [(doc_id, None if t is None
+                 else unicodedata.normalize("NFC", t))]
 
-    return df.select(id_col, text_col).mapInPandas(run, schema=schema)
+    return map_rows(df, [id_col, text_col], schema, nfc)
 
 
 def readability_scores(

@@ -56,8 +56,9 @@ def iter_wiki_pages(xml: bytes) -> Iterator[dict]:
     """Page records from dump XML: ``{page_id, title, ns, redirect,
     wikitext}``. Splits on the literal ``</page>`` closer and takes
     each piece from its first ``<page`` opener — identical pairing
-    to the feed parser's linear strategy; a malformed piece is
-    skipped, not fatal."""
+    to the feed parser's linear strategy; a malformed piece (or one
+    whose id or ns overflows the long/int columns) is skipped, not
+    fatal."""
     for piece in xml.split(b"</page>"):
         start = piece.find(b"<page")
         if start < 0:
@@ -68,6 +69,10 @@ def iter_wiki_pages(xml: bytes) -> Iterator[dict]:
         if tm is None or im is None:
             continue
         nm = _NS.search(body, 0, 8192)
+        page_id = int(im.group(1))
+        ns = int(nm.group(1)) if nm else 0
+        if page_id >= 1 << 63 or not -(1 << 31) <= ns < 1 << 31:
+            continue  # does not fit the long/int columns
         rm = _REDIRECT.search(body, 0, 8192)
         text = ""
         to = _TEXT_OPEN.search(body)
@@ -76,9 +81,9 @@ def iter_wiki_pages(xml: bytes) -> Iterator[dict]:
             if end >= 0:
                 text = body[to.end():end]
         yield {
-            "page_id": int(im.group(1)),
+            "page_id": page_id,
             "title": html.unescape(tm.group(1)),
-            "ns": int(nm.group(1)) if nm else 0,
+            "ns": ns,
             "redirect": html.unescape(rm.group(1)) if rm else None,
             "wikitext": html.unescape(text),
         }
@@ -179,94 +184,68 @@ def read_wiki_dump(spark: "SparkSession", path: str) -> "DataFrame":
     execution shape as the other compressed sources: the FILE is the
     unit of parallelism (a bz2 dump does not byte-split under a
     generic reader), inflation is budget-bounded, page splitting and
-    field extraction run inside one map-only mapInPandas."""
-    import pandas as pd
+    field extraction run inside one map-only :func:`map_rows` stage."""
+    from goose_parser_spark.ops._rowmap import map_rows
+    from goose_parser_spark.sources.inflate import inflate_members
 
-    from goose_parser_spark.deploy import ship_package
-    ship_package(spark)
+    budget = 1 << 30
+    fields = ("page_id", "title", "ns", "redirect", "wikitext")
 
-    def run(batches):
-        from goose_parser_spark.sources.inflate import inflate_members
-        budget = 1 << 30
-        for pdf in batches:
-            rows: dict[str, list] = {
-                "page_id": [], "title": [], "ns": [],
-                "redirect": [], "wikitext": []}
-            for pth, content in zip(pdf["path"], pdf["content"]):
-                if content is None:
-                    continue
-                data: bytes | None = bytes(content)
-                name = str(pth).lower()
-                # MULTI-member inflate: the standard Wikipedia dump
-                # is pages-articles-MULTISTREAM.xml.bz2 — many bz2
-                # streams back to back; decoding only the first
-                # silently dropped all but ~100 pages (code-review
-                # finding, regression-pinned)
-                if name.endswith(".bz2"):
-                    data = inflate_members(data, "bz2", budget)
-                elif name.endswith(".gz"):
-                    data = inflate_members(data, "gz", budget)
-                if data is None:
-                    continue
-                for page in iter_wiki_pages(data):
-                    for k, v in page.items():
-                        rows[k].append(v)
-            yield pd.DataFrame(rows)
+    def pages(pth, data):
+        if data is None:
+            return []
+        name = pth.lower()
+        # MULTI-member inflate: the standard Wikipedia dump
+        # is pages-articles-MULTISTREAM.xml.bz2 — many bz2
+        # streams back to back; decoding only the first
+        # silently dropped all but ~100 pages (code-review
+        # finding, regression-pinned)
+        if name.endswith(".bz2"):
+            data = inflate_members(data, "bz2", budget)
+        elif name.endswith(".gz"):
+            data = inflate_members(data, "gz", budget)
+        if data is None:
+            return []
+        return [tuple(page[k] for k in fields)
+                for page in iter_wiki_pages(data)]
 
     raw = (spark.read.format("binaryFile")
            .option("pathGlobFilter", "*.xml*")
-           .load(path)
-           .select("path", "content"))
-    return raw.mapInPandas(
-        run, schema="page_id long, title string, ns int, "
-                    "redirect string, wikitext string")
+           .load(path))
+    return map_rows(raw, ["path", "content"],
+                    "page_id long, title string, ns int, "
+                    "redirect string, wikitext string", pages)
 
 
 def wiki_clean(df: "DataFrame", text_col: str = "wikitext",
                id_col: str = "page_id") -> "DataFrame":
-    """Wikitext → plain text at corpus scale: map-only Arrow-batched
-    mapInPandas (markup stripping is per-document string work — the
+    """Wikitext → plain text at corpus scale: map-only :func:`map_rows`
+    stage (markup stripping is per-document string work — the
     sanctioned Python point), one row per input with ``clean_text``
     and the integer markup-density signal ``n_templates`` (how many
     top-level templates were dropped — a quality feature: list/
     infobox-only pages have high template counts and little prose).
     Failures yield a NULL clean_text row (I4)."""
-    import pandas as pd
-
     from pyspark.sql.types import (
         IntegerType, StringType, StructField, StructType,
     )
 
-    from goose_parser_spark.deploy import ship_package
-    ship_package(df.sparkSession)
+    from goose_parser_spark.ops._rowmap import map_rows
+
     out_schema = StructType([
         df.schema[id_col],
         StructField("clean_text", StringType(), True),
         StructField("n_templates", IntegerType(), True),
     ])
 
-    def run(batches):
-        for pdf in batches:
-            ids: list = []
-            texts: list = []
-            counts: list = []
-            for pid, wt in zip(pdf[id_col], pdf[text_col]):
-                if wt is None:
-                    continue
-                ids.append(pid)
-                try:
-                    texts.append(wikitext_to_text(str(wt)))
-                    counts.append(_count_top_templates(str(wt)))
-                except Exception:  # noqa: BLE001 — I4 isolation
-                    texts.append(None)
-                    counts.append(None)
-            out = pd.DataFrame({"_id": ids, "clean_text": texts,
-                                "n_templates": counts})
-            out.columns = [id_col] + list(out.columns[1:])
-            yield out
+    def clean(pid, wt):
+        if wt is None:
+            return []
+        wt = str(wt)
+        return [(pid, wikitext_to_text(wt), _count_top_templates(wt))]
 
-    return df.select(id_col, text_col).mapInPandas(
-        run, schema=out_schema)
+    return map_rows(df, [id_col, text_col], out_schema, clean,
+                    poison=lambda pid, wt, exc: [(pid, None, None)])
 
 
 def _count_top_templates(s: str) -> int:

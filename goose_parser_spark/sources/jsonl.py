@@ -59,40 +59,31 @@ def read_pages_jsonl_zst(spark: "SparkSession", path: str,
     inflates Hadoop-registered codecs (gzip), so like WARC the unit
     of parallelism is the FILE: one binaryFile task per shard (a zstd
     stream cannot be byte-split), the pure-stdlib RFC 8878 decoder
-    (ops/zstdcodec.py) inflates inside mapInPandas, and lines parse
-    with ``from_json`` under the EXPLICIT wire schema — same
-    no-inference contract as :func:`read_pages_jsonl`. A shard that
+    (ops/zstdcodec.py) inflates inside one ``map_rows`` stage, and
+    lines parse with ``from_json`` under the EXPLICIT wire schema —
+    same no-inference contract as :func:`read_pages_jsonl`. A shard that
     fails to inflate yields no rows (best-effort, same as a WARC
     member that fails to parse); per-doc budget is the caller-tuned
     ``max_out``."""
-    import pandas as pd
+    from goose_parser_spark.ops._rowmap import map_rows
+    from goose_parser_spark.ops.zstdcodec import ZstdError, decode_frames
 
-    from goose_parser_spark.deploy import ship_package
-    ship_package(spark)
     sch = schema or JSONL_PAGES_SCHEMA
 
-    def run(batches):
-        from goose_parser_spark.ops.zstdcodec import (
-            ZstdError, decode_frames)
-        for pdf in batches:
-            lines: list[str] = []
-            for content in pdf["content"]:
-                if content is None:
-                    continue
-                try:
-                    data, _, _ = decode_frames(
-                        bytes(content), max_out=1 << 30,
-                        verify_checksum=False)
-                except ZstdError:
-                    continue
-                lines.extend(data.decode("utf-8", "replace").splitlines())
-            yield pd.DataFrame({"value": lines})
+    def lines(content):
+        if content is None:
+            return []
+        try:
+            data, _, _ = decode_frames(content, max_out=1 << 30,
+                                       verify_checksum=False)
+        except ZstdError:
+            return []
+        return _split_lines(data)
 
     raw = (spark.read.format("binaryFile")
            .option("pathGlobFilter", "*.jsonl.zst")
-           .load(path)
-           .select("content"))
-    text = raw.mapInPandas(run, schema="value string")
+           .load(path))
+    text = map_rows(raw, ["content"], "value string", lines)
     df = (text.select(F.from_json("value", sch).alias("j"))
           .select("j.*"))
     if "html_b64" in df.columns:
@@ -105,6 +96,12 @@ def read_pages_jsonl_zst(spark: "SparkSession", path: str,
 # but a shard that inflates past 1 GiB in one task is either a bomb
 # or mis-sharded — skipped, not OOM'd (same stance as the zst path).
 _SHARD_BUDGET = 1 << 30
+
+
+def _split_lines(data: bytes) -> list[tuple[str]]:
+    """One ``value`` row per line of an inflated shard."""
+    return [(line,) for line in
+            data.decode("utf-8", "replace").splitlines()]
 
 
 def _inflate_shard(name: str, content: bytes) -> bytes | None:
@@ -150,36 +147,25 @@ def read_pages_jsonl_compressed(
     :func:`read_pages_jsonl_zst`: the FILE is the unit of parallelism
     (none of these streams byte-split safely under a generic reader),
     inflate is budget-bounded per shard inside one map-only
-    mapInPandas, and lines parse with ``from_json`` under the
+    ``map_rows`` stage, and lines parse with ``from_json`` under the
     EXPLICIT wire schema. A shard that fails to inflate yields no
     rows (best-effort)."""
     import os
 
-    import pandas as pd
+    from goose_parser_spark.ops._rowmap import map_rows
 
-    from goose_parser_spark.deploy import ship_package
-    ship_package(spark)
     sch = schema or JSONL_PAGES_SCHEMA
 
-    def run(batches):
-        for pdf in batches:
-            lines: list[str] = []
-            for pth, content in zip(pdf["path"], pdf["content"]):
-                if content is None:
-                    continue
-                data = _inflate_shard(os.path.basename(str(pth)),
-                                      bytes(content))
-                if data is None:
-                    continue
-                lines.extend(
-                    data.decode("utf-8", "replace").splitlines())
-            yield pd.DataFrame({"value": lines})
+    def lines(pth, content):
+        if content is None:
+            return []
+        data = _inflate_shard(os.path.basename(pth), content)
+        return [] if data is None else _split_lines(data)
 
     raw = (spark.read.format("binaryFile")
            .option("pathGlobFilter", "*.jsonl*")
-           .load(path)
-           .select("path", "content"))
-    text = raw.mapInPandas(run, schema="value string")
+           .load(path))
+    text = map_rows(raw, ["path", "content"], "value string", lines)
     df = (text.select(F.from_json("value", sch).alias("j"))
           .select("j.*"))
     if "html_b64" in df.columns:

@@ -275,3 +275,9 @@ def test_normalize_text_nfc_composes_combining_marks(spark):
     assert out[1] == "café naïve"
     assert out[2] == "plain ascii"
     assert out[3] is None
+    # the id column keeps its type (a string id used to fail the job)
+    sdf = spark.createDataFrame([("a", "cafe\u0301")],
+                                "doc_id string, text string")
+    res = normalize_text_nfc(sdf)
+    assert res.schema["doc_id"].dataType.simpleString() == "string"
+    assert res.collect()[0].asDict() == {"doc_id": "a", "text": "caf\u00e9"}

@@ -98,6 +98,34 @@ def test_robots_directives_sitemaps_and_crawl_delay(spark):
     assert out["c.test"]["crawl_delay"] is None  # unparseable ignored
 
 
+def test_non_finite_crawl_delay_is_ignored(spark):
+    """``float`` accepts nan/inf; such delays are unparseable as a
+    wait time and must not reach the scheduler, where an infinite
+    delay overflowed the ANSI cast and failed the whole job."""
+    from goose_parser_spark.ops.crawl import schedule_frontier
+    from goose_parser_spark.ops.robots import (
+        parse_robots_directives_text, robots_directives)
+    bad = ("nan", "inf", "-inf")
+    for val in bad:
+        body = f"User-agent: *\nCrawl-delay: {val}\n"
+        assert parse_robots_directives_text(body) == ([], None)
+    df = spark.createDataFrame(
+        [(f"{i}.test", f"User-agent: *\nCrawl-delay: {val}\n")
+         for i, val in enumerate(bad)],
+        "host string, robots_txt string")
+    delays = robots_directives(df)
+    assert [r["crawl_delay"] for r in delays.collect()] == [None] * 3
+    fr = spark.createDataFrame(
+        [(f"https://{i}.test/{k}", f"{i}.test")
+         for i in range(len(bad)) for k in range(2)],
+        "url string, host string")
+    out = {r["url"]: r["start_offset_ms"]
+           for r in schedule_frontier(fr, delays,
+                                      default_delay_s=2.0).collect()}
+    assert out == {f"https://{i}.test/{k}": 2000 * k
+                   for i in range(len(bad)) for k in range(2)}
+
+
 def test_robots_directives_last_group_wins_and_sitemap_splits_groups():
     """Same agent heading two groups: the LAST group's Crawl-delay
     wins (crawler convention: later declarations override). An

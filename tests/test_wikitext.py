@@ -94,6 +94,20 @@ def test_read_wiki_dump_spark(spark, tmp_path):
     assert rows[3].title == "Three" and rows[2].wikitext == "beta"
 
 
+def test_page_whose_id_or_ns_overflows_is_skipped(spark, tmp_path):
+    """page_id is a long and ns an int: a page outside those ranges is
+    skipped like a malformed one, and the dump still loads."""
+    from goose_parser_spark.ops.wikitext import read_wiki_dump
+    dump = _dump([_page(1, "One", "a"), _page(2, "Two", "b", ns=1 << 31),
+                  _page(1 << 63, "Three", "c"),
+                  _page(4, "Four", "d", ns=-(1 << 31))])
+    assert [(p["page_id"], p["ns"]) for p in iter_wiki_pages(dump)] == [
+        (1, 0), (4, -(1 << 31))]
+    (tmp_path / "a.xml").write_bytes(dump)
+    rows = sorted(read_wiki_dump(spark, str(tmp_path)).collect())
+    assert [(r.page_id, r.ns) for r in rows] == [(1, 0), (4, -(1 << 31))]
+
+
 def test_wiki_clean_spark_op(spark):
     from goose_parser_spark.ops.wikitext import wiki_clean
     df = spark.createDataFrame(
